@@ -1,0 +1,2 @@
+"""The repository benchmark: ``python3 perfbench/run.py --workload <name>
+--seed <n> --seconds <s> --trace <0|1>``. See run.py."""
