@@ -64,15 +64,12 @@ PER_LAYER: dict[str, str] = {
     "runner.reloads": "count",
     "plans.sql_task_s": "s",
     "upsert.process_batch_s": "s",
-    "upsert.process_batch_p90_s": "s",
+    "upsert.process_batch_last_s": "s",
     "upsert.bytes_written_per_input_byte": "ratio",
     "upsert.snapshot_rows": "count",
     "sources.parquet_files_written_per_tick": "count",
     "trace.overhead_s": "s",
 }
-
-# Number of set-ups per run; setup_s is their median.
-SETUPS = 2
 
 
 # ---------------------------------------------------------------------------
@@ -276,35 +273,66 @@ def _pss_bytes(pid: int) -> int:
     return 0
 
 
-def tree_pss_bytes(root: int, exclude: set[int]) -> int:
-    """Summed PSS of ``root`` and its descendants, skipping the subtrees
-    rooted at ``exclude``."""
-    total, todo = 0, [root]
+def _rss_bytes(pid: int) -> int:
+    try:
+        with open(f"/proc/{pid}/statm") as f:
+            return int(f.read().split()[1]) * os.sysconf("SC_PAGE_SIZE")
+    except (OSError, ValueError, IndexError):
+        return 0
+
+
+def _comm(pid: int) -> str:
+    try:
+        with open(f"/proc/{pid}/comm") as f:
+            return f.read().strip()
+    except OSError:
+        return "?"
+
+
+def tree_resident_bytes(root: int, exclude: set[int]) -> dict[str, int]:
+    """Resident bytes of the Python processes and the JVM among ``root``
+    and its descendants, keyed ``"<pid>:<command>"``, skipping the subtrees
+    rooted at ``exclude``.
+
+    Python processes count their PSS, so pages the forked workers share
+    count once. The JVM counts its RSS: reading its PSS walks its page
+    tables, 10-30 ms a read against well under 0.1 ms. Other processes
+    are left out: they are helper commands the JVM forks, which until
+    they exec show the whole JVM's pages as their own."""
+    out, todo = {}, [root]
     while todo:
         pid = todo.pop()
         if pid in exclude:
             continue
-        total += _pss_bytes(pid)
+        comm = _comm(pid)
+        if comm == "java":
+            out[f"{pid}:{comm}"] = _rss_bytes(pid)
+        elif comm.startswith("python"):
+            out[f"{pid}:{comm}"] = _pss_bytes(pid)
         todo.extend(_children(pid))
-    return total
+    return out
 
 
 class MemorySampler:
-    """Samples the summed resident memory (PSS) of this process tree on a
-    daemon thread and keeps the peak. Use as a context manager."""
+    """Samples the summed resident memory of this process tree (see
+    tree_resident_bytes) on a daemon thread and keeps the peak and its
+    parts. Use as a context manager."""
 
-    def __init__(self, interval_s: float = 0.1) -> None:
+    def __init__(self, interval_s: float = 0.2) -> None:
         self.interval_s = interval_s
         self.exclude: set[int] = set()
         self.peak = 0
+        self.peak_parts: dict[str, int] = {}
         self._lock = threading.Lock()  # sample() runs on two threads
         self._stop = threading.Event()
         self._thread: threading.Thread | None = None
 
     def sample(self) -> None:
-        now = tree_pss_bytes(os.getpid(), self.exclude)
+        parts = tree_resident_bytes(os.getpid(), self.exclude)
+        now = sum(parts.values())
         with self._lock:
-            self.peak = max(self.peak, now)
+            if now > self.peak:
+                self.peak, self.peak_parts = now, parts
 
     def reset(self) -> None:
         """Start a new peak from the current footprint."""
@@ -383,7 +411,7 @@ class JobCounter:
 
 class Workload:
     """One workload. run.py calls, in order: ``prepare`` (make inputs),
-    then per set-up ``load``/``after_load``/``warmup``, then
+    then in the set-up ``load``, ``after_load`` and ``warmup``, then
     ``check_before``, ``run_round`` until the time is spent and at least
     ``min_rounds`` rounds ran, ``check_after`` and, when tracing,
     ``per_layer``. ``with`` releases whatever ``prepare`` started."""

@@ -181,18 +181,26 @@ def write_http_inputs(
 
 def write_change_slices(
     path: str, seed: int, slices: int, rows_per_slice: int, key_space: int,
-    delete_share: float,
+    delete_share: float, hot_share: float,
 ) -> list[str]:
-    """Change slices ``<path>/slice-<i>.parquet``: upserts and deletes over
-    Zipf-skewed keys. ``seq`` runs forward with a backwards jitter of up to
-    three slices, so later slices carry changes older than rows already
-    folded in; ``change_id`` is unique and breaks ``seq`` ties."""
+    """Change slices ``<path>/slice-<i>.parquet``: upserts and deletes. A
+    ``hot_share`` of rows hits Zipf-skewed hot keys, updated again and
+    again; the rest draws uniformly from ``key_space``, so most of those
+    keys are new and the folded state grows with every slice. ``seq`` runs
+    forward with a backwards jitter of up to three slices, so later slices
+    carry changes older than rows already folded in; ``change_id`` is
+    unique and breaks ``seq`` ties."""
     os.makedirs(path, exist_ok=True)
     rng = np.random.default_rng([seed, 3])
     out = []
     for i in range(slices):
         base = i * rows_per_slice + np.arange(rows_per_slice)
-        keys = (rng.zipf(1.3, rows_per_slice) - 1) % key_space
+        hot = rng.random(rows_per_slice) < hot_share
+        keys = np.where(
+            hot,
+            (rng.zipf(1.3, rows_per_slice) - 1) % key_space,
+            rng.integers(0, key_space, rows_per_slice),
+        )
         p = f"{path}/slice-{i:04d}.parquet"
         _write(p, {
             "key": keys.astype(np.int64),

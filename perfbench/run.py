@@ -13,29 +13,35 @@ operation starts only after the previous one finished):
                          task and a ``.sql`` aggregate task
 
 A run generates its inputs from the seed under ``.perfbench_work/``, sets
-up the engine ``SETUPS`` times (session build, function registration,
-table loading, one untimed warm-up pass; the first set-up also launches the
-JVM), checks outputs, measures for ``--seconds`` seconds of operation time,
-checks outputs again, and prints one JSON result object as the last line of
-stdout. ``--trace 0`` reports the end-to-end metrics of common.END_TO_END;
-``--trace 1`` reports the per-layer metrics of common.PER_LAYER, taken from
-spans around calls made by these files, and writes the spans out.
+up the engine once (JVM launch, session build, function registration,
+table loading, one warm-up pass), checks outputs, measures rounds for at
+least ``--seconds`` seconds of operation time and at least the workload's
+``min_rounds`` rounds, checks outputs again, and prints one JSON result
+object as the last line of stdout. ``--trace 0`` reports the end-to-end
+metrics of common.END_TO_END; ``--trace 1`` reports the per-layer metrics
+of common.PER_LAYER, taken from spans around calls made by these files, and
+writes the spans out. A traced run alternates traced and untraced rounds;
+``trace.overhead_s`` is the difference of their median round times.
+
+The engine runs with the program's own ``build_session`` settings on
+``local[nproc]`` with ``SPARK_GRAFT_CPUS=nproc``, except for the driver
+heap, fixed at ``DRIVER_MEM`` (see there).
 
 End-to-end metrics, per workload ("round" / "operation"):
 
 - etl_batch: round = operation = one batch of the 7 queries
 - http_enrich: round = one call on each path; operation = one call
-- runner_microbatch: round = one tick of both tasks; operation = one
-  ``run_once``
+- runner_microbatch: round = operation = one tick, a ``run_once`` of
+  each of the two tasks
 
-``setup_s`` is the median set-up time, ``job_s`` the median round time,
+``setup_s`` is the set-up time, ``job_s`` the median round time,
 ``op_p50_s`` the median operation time, ``rows_per_s`` input rows handled
 per second of operation time, ``success_rate`` one minus failed/attempted
 operations (a failed output check fails the operation it checked) and
 ``peak_rss_mb`` the peak summed resident memory of this process, the JVM
-and the Python workers during the measured rounds, sampled every 0.1 s,
-with pages the forked workers share counted once (PSS). The exit code is 1 when any check failed, 2 when the
-program cannot be imported.
+and the Python workers from set-up to the last round, sampled every 0.2 s,
+with pages the forked workers share counted once. The exit code is 1
+when any check failed, 2 when the program cannot be imported.
 
 This is not bench.py's ``headline_total``, which times one pass over the
 catalog's headline queries on the sf0.1 test set.
@@ -61,8 +67,14 @@ elif ROOT not in sys.path:
 
 WORKLOADS = ["etl_batch", "http_enrich", "runner_microbatch"]
 MAX_ROUNDS = 1000
-# The JVM heap is fixed from the start (-Xms = -Xmx): a heap the collector
-# grows on its own schedule made peak memory vary by a third between runs.
+# The driver heap is fixed at this size and made resident at JVM start
+# (-Xms = -Xmx, -XX:+AlwaysPreTouch), in place of the program's default
+# maximum of 8g. A heap that the collector grows on its own schedule, from
+# the default initial size or from 1g up to 8g, made peak_rss_mb spread by
+# 0.19-0.42 of its median over seeds of one workload. A fixed heap that
+# the JVM touches only as it allocates left the JVM's resident size
+# between 0.9 and 1.3 GB on http_enrich, which allocates little. The
+# inputs are small enough for 1g.
 DRIVER_MEM = "1g"
 
 
@@ -99,7 +111,7 @@ def _build_session(work: str):
         extra_conf={
             "spark.ui.showConsoleProgress": "false",
             "spark.driver.extraJavaOptions": (
-                f"-Xms{DRIVER_MEM} -Djava.io.tmpdir={tmp} -XX:-UsePerfData"
+                f"-Xms{DRIVER_MEM} -XX:+AlwaysPreTouch -Djava.io.tmpdir={tmp} -XX:-UsePerfData"
             ),
             "spark.sql.warehouse.dir": os.path.join(work, "warehouse"),
         },
@@ -164,22 +176,18 @@ def run(args: argparse.Namespace) -> int:
         wl.prepare()  # inputs are complete before any timing starts
         phase("prepare")
 
-        setups: list[float] = []
-        spark = None
-        for i in range(C.SETUPS):
-            if spark is not None:
-                spark.stop()
-            tracer.new_trace()
-            with tracer.span("setup") as s:
-                with tracer.span("session.build"):
-                    spark = _build_session(work)
-                with tracer.span("session.load_tables"):
-                    wl.load(spark)
-                wl.after_load(spark)
-                with tracer.span("warmup"):
-                    wl.warmup(spark)
-            setups.append(s.seconds)
-        phase("setups")
+        memory.reset()  # peak memory from set-up on
+        tracer.new_trace()
+        with tracer.span("setup") as s:
+            with tracer.span("session.build"):
+                spark = _build_session(work)
+            with tracer.span("session.load_tables"):
+                wl.load(spark)
+            wl.after_load(spark)
+            with tracer.span("warmup"):
+                wl.warmup(spark)
+        setup_s = s.seconds
+        phase("setup")
 
         register_s = _register_seconds(spark) if args.trace else 0.0
         meta = C.run_metadata(ROOT, spark)
@@ -187,28 +195,26 @@ def run(args: argparse.Namespace) -> int:
         phase("check_before")
 
         counter = C.JobCounter(spark) if args.trace else None
-        # Peak memory covers the measured rounds only: during set-up the
-        # second session starts while the first one's Python workers are
-        # still exiting, an overlap no user of one session sees.
-        memory.reset()
-        op_times: list[float] = []
-        round_times = {True: [], False: []}
+        op_times: list[float] = []  # of the rounds the metrics come from
+        round_times: dict[bool, list[float]] = {True: [], False: []}
+        measured = round_times[bool(args.trace)]
         jobs: list[dict] = []
         rows = 0
         i = 0
-        # Traced runs trace every measured round, then run as many untraced
-        # rounds so the tracing overhead can be reported.
-        while i < MAX_ROUNDS and (sum(op_times) < args.seconds or i < wl.min_rounds):
-            ops, n_rows = _round(wl, spark, i, bool(args.trace), tracer, counter, jobs)
-            op_times.extend(ops)
-            round_times[bool(args.trace)].append(sum(ops))
-            rows += n_rows
-            i += 1
-        for j in range(i if args.trace else 0):
-            ops, _ = _round(wl, spark, i + j, False, tracer, counter, jobs)
-            round_times[False].append(sum(ops))
+        # A traced run follows each traced round with an untraced one, so
+        # both kinds see the same mix of state sizes and script reloads.
+        kinds = [True, False] if args.trace else [False]
+        while i < MAX_ROUNDS and (sum(op_times) < args.seconds or len(measured) < wl.min_rounds):
+            for traced in kinds:
+                ops, n_rows = _round(wl, spark, i, traced, tracer, counter, jobs)
+                round_times[traced].append(sum(ops))
+                if traced == bool(args.trace):
+                    op_times.extend(ops)
+                    rows += n_rows
+                i += 1
         memory.sample()
         peak_mb = memory.peak_mb
+        meta_peak = {k: round(v / 2**20, 1) for k, v in memory.peak_parts.items()}
         phase("rounds")
 
         meta["host_probe"] = C.host_probe(spark)
@@ -222,9 +228,8 @@ def run(args: argparse.Namespace) -> int:
             shutil.rmtree(entry.path, ignore_errors=True)
     phase("stop")
 
-    measured = round_times[bool(args.trace)]
     counts = {
-        "setup_s": len(setups),
+        "setup_s": 1,
         "job_s": len(measured),
         "op_p50_s": len(op_times),
         "rows_per_s": len(op_times),
@@ -232,9 +237,9 @@ def run(args: argparse.Namespace) -> int:
     }
     meta.update(
         workload=args.workload, seed=args.seed, seconds=args.seconds, trace=args.trace,
-        rounds=len(measured), ops=len(op_times),
+        rounds=len(measured), ops=len(op_times), round_s=[round(t, 3) for t in measured],
         op_highest_supported_percentile=C.highest_supported_percentile(len(op_times)),
-        failures=outcomes.notes, phases_s=phases, setups_s=setups,
+        failures=outcomes.notes, phases_s=phases, peak_rss_parts_mb=meta_peak,
     )
     if args.trace:
         layer.update(
@@ -252,7 +257,7 @@ def run(args: argparse.Namespace) -> int:
         tracer.write(os.path.join(work, "spans.jsonl"))
     else:
         values = {
-            "setup_s": C.median(setups),
+            "setup_s": setup_s,
             "job_s": C.median(measured),
             "op_p50_s": C.median(op_times),
             "rows_per_s": rows / sum(op_times),
@@ -287,7 +292,7 @@ def _register_seconds(spark) -> float:
     """Time to register every SQL function and data source on a built
     session. build_session registers once inside its own call; this repeats
     the registration (it replaces functions with identical ones) after the
-    set-ups, so it adds nothing to setup_s."""
+    set-up, so it adds nothing to setup_s."""
     from data_misc_tools_spark.functions.registry import register_functions
     from data_misc_tools_spark.sources.pydatasource import register_python_datasources
 

@@ -5,18 +5,21 @@ back, from empty state on every run:
 
 - ``ingest.py``, written by this benchmark. Its ``param`` is the tick
   counter, fed back by the runner. Each tick it reads the next seeded
-  change slice (upserts and deletes, Zipf-skewed keys, out-of-order
-  sequence numbers), folds it into a keep-latest snapshot with
-  ``ParquetUpsertSink.process_batch`` and exposes ``read_latest`` as the
-  ``latest_state`` view.
+  change slice of ``ROWS_PER_SLICE`` rows (upserts and deletes, a share of
+  Zipf-skewed hot keys, out-of-order sequence numbers), folds it into a
+  keep-latest snapshot with ``ParquetUpsertSink.process_batch`` and
+  exposes ``read_latest`` as the ``latest_state`` view. Most keys of a
+  slice are new, so the snapshot, which every batch rewrites whole, grows
+  by about three quarters of a slice per tick.
 - ``agg.sql``, which aggregates ``latest_state`` through
   ``plans.sql_script``.
 
-Before every ``RELOAD_EVERY``-th tick the benchmark rewrites
-``ingest.py``, forcing a hot reload and a new source snapshot. Set-up
-builds the ``Runner`` over the records table left by earlier set-ups and
-warms it on a second task pair with its own state, so the measured tasks
-start empty.
+Tick 0 loads ``ingest.py`` for the first time; before every
+``RELOAD_EVERY``-th tick after it the benchmark rewrites the script,
+forcing a hot reload and a new source snapshot, so one tick in every
+``RELOAD_EVERY`` loads a script version. Set-up builds the ``Runner`` over
+an empty records table and warms it on a second task pair with its own
+state, so the measured tasks start empty.
 
 Checks: the final snapshot equals keep-latest computed independently in
 DuckDB over every slice folded in; the last aggregate equals the same
@@ -27,17 +30,22 @@ and one ``succeeded`` row for every ``run_once`` call.
 from __future__ import annotations
 
 import os
+import time
 from collections import defaultdict
 
 from perfbench import common as C
 from perfbench import datagen
 
-ROWS_PER_SLICE = 2_000
-SLICES = 64
-KEY_SPACE = 50_000
+# process_batch was sized at 5,000-row batches (0.48-1.6 s each onto
+# snapshots of up to 100k rows on a 4-core host).
+ROWS_PER_SLICE = 5_000
+SLICES = 24  # ticks past the last slice start over at slice 0
+KEY_SPACE = 1_000_000
+HOT_SHARE = 0.3
 DELETE_SHARE = 0.15
-RELOAD_EVERY = 2  # ticks 1, 3, 5, ... hot-reload a rewritten ingest.py
+RELOAD_EVERY = 3  # ticks 3, 6, 9, ... hot-reload a rewritten ingest.py
 BUCKETS = 16
+INIT_REPEATS = 3  # Runner() constructions timed for runner.init_s
 
 INGEST = '''"""Benchmark ingest task, version {version}: fold the next change
 slice into the keep-latest snapshot."""
@@ -112,11 +120,15 @@ def _files(root: str) -> dict[str, int]:
 
 
 class RunnerMicrobatch(C.Workload):
+    # Five ticks hold two script loads (ticks 0 and 3) and three plain
+    # ticks over a growing snapshot, so the median tick is a plain one.
+    min_rounds = 5
+
     def prepare(self) -> None:
         work = self.ctx.work
         self.slices = datagen.write_change_slices(
             os.path.join(work, "changes"), self.ctx.seed, SLICES, ROWS_PER_SLICE,
-            KEY_SPACE, DELETE_SHARE,
+            KEY_SPACE, DELETE_SHARE, HOT_SHARE,
         )
         self.records = os.path.join(work, "records")
         self.main = _TaskPair(os.path.join(work, "main"), self.slices, "latest_state")
@@ -125,20 +137,18 @@ class RunnerMicrobatch(C.Workload):
                       self.warm.ingest.path: 0, self.warm.agg.path: 0}
         self.ticks = 0
         self.last_agg = None
-        self.init_s: list[float] = []
         self.overhead: list[float] = []
         self.process_batch: list[float] = []
         self.sql_task: list[float] = []
-        self.loads: set[str] = set()
+        self.loads: set[float] = set()  # load times of the main ingest.py
         self.files_per_tick: list[int] = []
         self.write_ratio: list[float] = []
 
     def after_load(self, spark) -> None:
         from data_misc_tools_spark.runner import Runner
 
-        with self.tracer.span("runner.init") as s:
+        with self.tracer.span("runner.init"):
             self.runner = Runner(spark, self.records)
-        self.init_s.append(s.seconds)
 
     def _run_once(self, task):
         """``run_once`` on ``task``; returns (result, its span). The runner
@@ -159,7 +169,7 @@ class RunnerMicrobatch(C.Workload):
                 raise RuntimeError(f"warm-up run of {task.path} failed")
 
     def run_round(self, spark, index: int, traced: bool) -> tuple[list[float], int]:
-        if index % RELOAD_EVERY == RELOAD_EVERY - 1:
+        if index and index % RELOAD_EVERY == 0:
             self.main.write_ingest()
         before = _files(self.ctx.work) if traced else None
         result, ingest = self._run_once(self.main.ingest)
@@ -167,9 +177,13 @@ class RunnerMicrobatch(C.Workload):
             self.outcomes.fail(f"ingest tick {self.ticks}: result {str(result)[:200]}")
         else:
             self.outcomes.ok()
+            # The script publishes its load time and clock readings in
+            # the ``perfbench.ingest`` conf.
+            clocks = tuple(map(float, spark.conf.get("perfbench.ingest").split(",")))
+            self.loads.add(clocks[0])
+            if traced:
+                self._trace_ingest(ingest, clocks, before)
         self.ticks += 1
-        if traced:
-            self._trace_ingest(spark, ingest, before)
         agg, agg_span = self._run_once(self.main.agg)
         if agg is None:
             self.outcomes.fail(f"agg tick {self.ticks - 1} failed")
@@ -179,20 +193,20 @@ class RunnerMicrobatch(C.Workload):
         if traced:
             self.sql_task.append(agg_span.seconds)
             self.files_per_tick.append(len(set(_files(self.ctx.work)) - set(before)))
-        return [ingest.seconds, agg_span.seconds], ROWS_PER_SLICE
+        # The operation is the whole tick: a median over single run_once
+        # calls would sit between the levels of the two tasks.
+        return [ingest.seconds + agg_span.seconds], ROWS_PER_SLICE
 
-    def _trace_ingest(self, spark, ingest, before: dict[str, int]) -> None:
-        """Spans and counters of one ingest tick; the script publishes its
-        own clock readings in the ``perfbench.ingest`` conf."""
-        loaded, t0, t1, t2, t3 = map(float, spark.conf.get("perfbench.ingest").split(","))
-        self.loads.add(repr(loaded))
+    def _trace_ingest(self, ingest, clocks: tuple[float, ...], before: dict[str, int]) -> None:
+        """Spans and counters of one ingest tick."""
+        _, t0, t1, t2, t3 = clocks
         body = self.tracer.add("task.body", t0, t3, parent=ingest.id)
         self.tracer.add("streaming.process_batch", t1, t2, parent=body)
         self.overhead.append(ingest.seconds - (t3 - t0))
         self.process_batch.append(t2 - t1)
         after = _files(self.main.state)
         new = {p: n for p, n in after.items() if p not in before}
-        slice_bytes = os.path.getsize(self.slices[(self.ticks - 1) % len(self.slices)])
+        slice_bytes = os.path.getsize(self.slices[self.ticks % len(self.slices)])
         self.write_ratio.append(sum(new.values()) / slice_bytes)
 
     def check_after(self, spark) -> None:
@@ -243,15 +257,28 @@ class RunnerMicrobatch(C.Workload):
             if per_path.get(path, 0) != n:
                 self.outcomes.fail(f"{path}: {per_path.get(path, 0)} recorded runs, {n} calls")
 
+    def _init_seconds(self, spark) -> list[float]:
+        """``Runner()`` construction over the records table the run has
+        filled, which is what a restarted runner reads."""
+        from data_misc_tools_spark.runner import Runner
+
+        out = []
+        for _ in range(INIT_REPEATS):
+            with self.tracer.span("runner.init") as s:
+                Runner(spark, self.records)
+            out.append(s.seconds)
+        return out
+
     def per_layer(self, spark) -> dict[str, float]:
         return {
             "runner.overhead_s": C.median(self.overhead),
-            "runner.init_s": C.median(self.init_s),
+            "runner.init_s": C.median(self._init_seconds(spark)),
             "runner.record_files": float(len(_files(self.records))),
-            "runner.reloads": float(len(self.loads)),
+            "runner.reloads": float(len(self.loads) - 1),
             "plans.sql_task_s": C.median(self.sql_task),
             "upsert.process_batch_s": C.median(self.process_batch),
-            "upsert.process_batch_p90_s": C.percentile(self.process_batch, 90).value,
+            # The last traced tick folds onto the largest snapshot.
+            "upsert.process_batch_last_s": self.process_batch[-1],
             "upsert.bytes_written_per_input_byte": C.median(self.write_ratio),
             "upsert.snapshot_rows": float(self.snapshot_rows),
             "sources.parquet_files_written_per_tick": C.median(self.files_per_tick),

@@ -75,7 +75,7 @@ def test_tracer_self_time_subtracts_covered_child_time():
 
 def test_change_slices_follow_the_seed(tmp_path):
     def gen(seed, sub):
-        paths = datagen.write_change_slices(str(tmp_path / sub), seed, 2, 100, 1000, 0.2)
+        paths = datagen.write_change_slices(str(tmp_path / sub), seed, 2, 100, 1000, 0.2, 0.3)
         return [open(p, "rb").read() for p in paths]
 
     assert gen(1, "a") == gen(1, "b")
