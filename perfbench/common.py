@@ -313,6 +313,91 @@ def tree_resident_bytes(root: int, exclude: set[int]) -> dict[str, int]:
     return out
 
 
+def descendants(root: int) -> list[int]:
+    """Every process below ``root``, zombies included."""
+    out, todo = [], _children(root)
+    while todo:
+        pid = todo.pop()
+        out.append(pid)
+        todo.extend(_children(pid))
+    return out
+
+
+def adopt_orphans() -> None:
+    """Make this process the subreaper of its tree: a descendant whose
+    parent dies (the Python workers, when the JVM that forked them exits)
+    is re-parented here rather than to init, so stop_descendants sees it
+    and reaps it."""
+    import ctypes
+
+    try:
+        ctypes.CDLL(None, use_errno=True).prctl(36, 1, 0, 0, 0)  # PR_SET_CHILD_SUBREAPER
+    except (OSError, AttributeError):
+        pass
+
+
+def _reap() -> None:
+    while True:
+        try:
+            pid, _ = os.waitpid(-1, os.WNOHANG)
+        except ChildProcessError:
+            return
+        if pid == 0:
+            return
+
+
+def stop_jvm(grace_s: float = 60.0) -> None:
+    """End the Spark JVM this process launched and wait for it. The JVM
+    exits on EOF on its stdin, running Spark's shutdown hooks; left alone
+    it does so only after this process has exited, and outlives it by
+    seconds. Killed if it has not ended after ``grace_s``."""
+    if "pyspark" not in sys.modules:
+        return
+    from pyspark import SparkContext
+
+    gateway = SparkContext._gateway
+    if gateway is None:
+        return
+    proc = getattr(gateway, "proc", None)
+    try:
+        gateway.shutdown()
+    except Exception:
+        pass
+    SparkContext._gateway = SparkContext._jvm = None
+    if proc is None:
+        return
+    try:
+        proc.stdin.close()
+        proc.wait(timeout=grace_s)
+    except (OSError, subprocess.TimeoutExpired):
+        proc.kill()
+        proc.wait()
+
+
+def stop_descendants(grace_s: float = 20.0) -> None:
+    """Stop the JVM, then wait until no descendant of this process is
+    left: ``grace_s`` for them to end on their own, then SIGTERM, then
+    SIGKILL, reaping each one."""
+    import signal
+
+    stop_jvm()
+    for sig, wait_s in ((None, grace_s), (signal.SIGTERM, 5.0), (signal.SIGKILL, 5.0)):
+        pids = descendants(os.getpid())
+        for pid in pids if sig is not None else []:
+            try:
+                os.kill(pid, sig)
+            except ProcessLookupError:
+                pass
+        end = time.monotonic() + wait_s
+        while pids and time.monotonic() < end:
+            _reap()
+            pids = descendants(os.getpid())
+            if pids:
+                time.sleep(0.05)
+        if not pids:
+            return
+
+
 class MemorySampler:
     """Samples the summed resident memory of this process tree (see
     tree_resident_bytes) on a daemon thread and keeps the peak and its

@@ -223,6 +223,7 @@ def run(args: argparse.Namespace) -> int:
         layer = wl.per_layer(spark) if args.trace else {}
         phase("check_after")
         spark.stop()
+        C.stop_jvm()
     for entry in os.scandir(work):  # inputs and Spark scratch; files stay
         if entry.is_dir():
             shutil.rmtree(entry.path, ignore_errors=True)
@@ -303,9 +304,19 @@ def _register_seconds(spark) -> float:
 
 
 def main(argv: list[str] | None = None) -> int:
+    from perfbench import common as C
+
     # SIGTERM unwinds like an exception, so the stub and Spark are stopped.
     signal.signal(signal.SIGTERM, lambda *_: sys.exit(143))
-    return run(_parse(argv))
+    args = _parse(argv)
+    C.adopt_orphans()
+    try:
+        return run(args)
+    finally:
+        # On every way out: no process this run started outlives it. A
+        # second SIGTERM must not cut this short.
+        signal.signal(signal.SIGTERM, signal.SIG_IGN)
+        C.stop_descendants()
 
 
 if __name__ == "__main__":

@@ -112,3 +112,17 @@ def test_stub_drop_mode_yields_counted_failures_not_crashes():
         dropped = stub.stats()["dropped"]
     assert outcomes.attempted == 60
     assert 0 < outcomes.failed == dropped < 60
+
+
+def test_stop_descendants_reaps_orphaned_grandchildren():
+    import subprocess
+
+    C.adopt_orphans()
+    # The shell exits at once; its background sleep is orphaned and comes
+    # back to this process as its subreaper.
+    subprocess.run(["sh", "-c", "sleep 60 >/dev/null 2>&1 &"], check=True)
+    child = subprocess.Popen(["sleep", "60"])
+    assert len(C.descendants(os.getpid())) == 2
+    C.stop_descendants(grace_s=0.2)
+    assert C.descendants(os.getpid()) == []
+    assert child.wait(timeout=1) is not None
