@@ -145,23 +145,7 @@ def register_functions(spark: SparkSession) -> None:
 def _register_http(spark: SparkSession) -> None:
     """Register scalar http_get / http_post Python UDFs (slow path —
     the batch operators in operators.http are the recommended form)."""
-    from pyspark.sql.types import (
-        IntegerType,
-        MapType,
-        StringType,
-        StructField,
-        StructType,
-    )
-
-    from data_misc_tools_spark.operators.http import http_call_once
-
-    ret = StructType(
-        [
-            StructField("code", IntegerType()),
-            StructField("headers", MapType(StringType(), StringType())),
-            StructField("content", StringType()),
-        ]
-    )
+    from data_misc_tools_spark.operators.http import HTTP_RESULT_TYPE, http_call_once
 
     def _get(url, timeout=3000, headers=None):
         return http_call_once("GET", url, timeout_ms=timeout or 3000, headers=headers)
@@ -173,5 +157,5 @@ def _register_http(spark: SparkSession) -> None:
 
     from pyspark.sql.functions import udf
 
-    spark.udf.register("http_get", udf(_get, ret).asNondeterministic())
-    spark.udf.register("http_post", udf(_post, ret).asNondeterministic())
+    spark.udf.register("http_get", udf(_get, HTTP_RESULT_TYPE).asNondeterministic())
+    spark.udf.register("http_post", udf(_post, HTTP_RESULT_TYPE).asNondeterministic())

@@ -47,7 +47,7 @@ from typing import Callable
 from pyspark.sql import SparkSession
 from pyspark.sql.functions import udtf
 
-HTTP_ROW_SCHEMA = "code int, headers map<string,string>, content string"
+from data_misc_tools_spark.operators.http import HTTP_RESULT_TYPE, http_call_once
 
 
 def _parse_headers(headers_json: str | None) -> dict[str, str] | None:
@@ -67,8 +67,6 @@ def make_http_get_udtf():
             timeout_ms: int = 3000,
             headers_json: str | None = None,
         ):
-            from data_misc_tools_spark.operators.http import http_call_once
-
             try:
                 hdrs = _parse_headers(headers_json)
             except Exception as e:  # bad headers JSON -> error-as-data
@@ -79,7 +77,7 @@ def make_http_get_udtf():
             )
             yield (code, rh, content)
 
-    return udtf(THttpGet, returnType=HTTP_ROW_SCHEMA)
+    return udtf(THttpGet, returnType=HTTP_RESULT_TYPE)
 
 
 def make_http_post_udtf():
@@ -94,8 +92,6 @@ def make_http_post_udtf():
             timeout_ms: int = 3000,
             headers_json: str | None = None,
         ):
-            from data_misc_tools_spark.operators.http import http_call_once
-
             try:
                 hdrs = _parse_headers(headers_json)
             except Exception as e:
@@ -106,7 +102,7 @@ def make_http_post_udtf():
             )
             yield (code, rh, content)
 
-    return udtf(THttpPost, returnType=HTTP_ROW_SCHEMA)
+    return udtf(THttpPost, returnType=HTTP_RESULT_TYPE)
 
 
 def make_jd_keys_udtf(client_factory: Callable[[], object]):

@@ -20,9 +20,9 @@ hive-udfs/.../http/HttpHelper.java:53-59).
 
 At 100 TB scale: HTTP calls are the bottleneck, not Spark — the
 operator exposes ``concurrency`` (threads per partition) and callers
-control total parallelism with ``df.repartition(n)``; retries with
-backoff are bounded so a dead endpoint degrades to error rows at a
-predictable rate instead of hanging executors.
+control total parallelism with ``df.repartition(n)``. There is no
+retry: each call runs once with a timeout, so a dead endpoint degrades
+to error rows instead of hanging executors.
 """
 
 from __future__ import annotations
@@ -43,13 +43,13 @@ from pyspark.sql.types import (
     StructType,
 )
 
-HTTP_RESULT_FIELDS = [
+# The one (code, headers, content) result type of every HTTP path: the
+# operators here, the t_http_* UDTFs and the http_get/http_post UDFs.
+HTTP_RESULT_TYPE = StructType([
     StructField("code", IntegerType()),
     StructField("headers", MapType(StringType(), StringType())),
     StructField("content", StringType()),
-]
-
-HTTP_RESULT_TYPE = StructType(HTTP_RESULT_FIELDS)
+])
 
 
 def http_call_once(

@@ -12,14 +12,19 @@ ExecutionRecord.scala:8-45).
 Spark-native redesign: scripts are Python modules exposing
 ``run(spark, param) -> Any`` (SQL scripts run through the statement
 splitter); "compilation" is importlib loading into a fresh module
-namespace per reload (no stale-closure reuse); execution records land
-in a parquet table instead of MySQL-over-JDO. No classloader
+namespace per reload (no stale-closure reuse). No classloader
 machinery — PySpark ships closures to executors natively.
+
+Execution records and script-source snapshots are driver-side JSON
+lines under ``records_path`` and ``<records_path>_src``, not a Spark job
+per row, and restart recovery parses them in plain Python; or they go
+to a database table (``records_jdbc_url``) like the reference's JDO.
 """
 
 from __future__ import annotations
 
 import importlib.util
+import json
 import os
 import re
 import time
@@ -28,7 +33,10 @@ import uuid
 from dataclasses import dataclass, field
 from typing import Any
 
+from pyspark.errors import UnsupportedOperationException
 from pyspark.sql import SparkSession
+
+from data_misc_tools_spark.sources import fs
 
 RECORD_SCHEMA = (
     "path string, script_type string, started_at bigint, finished_at bigint, "
@@ -134,6 +142,96 @@ class ScriptTask:
         return instance
 
 
+def _columns(schema: str) -> list[str]:
+    return [f.split()[0] for f in schema.split(",")]
+
+
+class _JsonLines:
+    """The rows of one table as JSON lines in files under ``root``,
+    written and read on the driver through ``sources.fs``: no Spark job.
+
+    Each instance appends to its own file, ``<start_ms>-<uuid>.jsonl``,
+    created on its first write, so two runners never share a file. A
+    file system that refuses append (S3A raises
+    UnsupportedOperationException) gets one file per row from then on,
+    ``<start_ms>-<uuid>-<n>.jsonl``; the reader does not change."""
+
+    def __init__(self, spark: SparkSession, root: str, schema: str) -> None:
+        self.spark = spark
+        self.root = root.rstrip("/")
+        self.columns = _columns(schema)
+        self._name = f"{int(time.time() * 1000)}-{uuid.uuid4().hex}"
+        self._written = 0
+        self._appends = True
+
+    def append(self, row: tuple) -> None:
+        line = json.dumps(dict(zip(self.columns, row))) + "\n"
+        self._written += 1
+        if self._appends:
+            try:
+                fs.append_text(self.spark, f"{self.root}/{self._name}.jsonl", line)
+                return
+            except UnsupportedOperationException:
+                self._appends = False
+        path = f"{self.root}/{self._name}-{self._written}.jsonl"
+        fs.write_text(self.spark, path, line, overwrite=False)
+
+    def rows(self) -> list[tuple]:
+        """Every row under ``root``; [] when the directory is absent. A
+        torn last line (no trailing newline: the writer died mid-append)
+        is skipped; any other unparseable line raises."""
+        if not fs.exists(self.spark, self.root):
+            return []
+        out = []
+        for entry in fs.ls(self.spark, self.root):
+            path = entry["path"]
+            if path.endswith((".parquet", "/_SUCCESS")):
+                raise ValueError(f"{path}: parquet execution records are no longer "
+                                 "read (records are JSON lines); use a new records_path")
+            if not path.endswith(".jsonl"):
+                continue
+            lines = fs.cat(self.spark, path).split("\n")
+            for i, line in enumerate(lines[:-1], 1):  # lines[-1]: "" or torn
+                try:
+                    r = json.loads(line)
+                except ValueError as e:
+                    raise ValueError(f"{path}:{i}: corrupt record line {line[:200]!r}") from e
+                out.append(tuple(r.get(c) for c in self.columns))
+        return out
+
+
+@dataclass
+class _JdbcTable:
+    """The same rows in a database table, like the reference's
+    JDO-backed RecordDao (records/RecordDao.scala:19-22 writes MySQL)."""
+
+    spark: SparkSession
+    url: str
+    table: str
+    properties: dict[str, str]
+    schema: str
+
+    def append(self, row: tuple) -> None:
+        from data_misc_tools_spark.sources.jdbc import df_to_jdbc
+
+        df_to_jdbc(
+            self.spark.createDataFrame([row], self.schema).coalesce(1),
+            self.url, self.table, mode="append", properties=self.properties,
+        )
+
+    def rows(self) -> list[tuple]:
+        """Every row; [] when the table is absent."""
+        from data_misc_tools_spark.sources.jdbc import jdbc_to_df, table_exists
+
+        if not table_exists(self.spark, self.url, self.table, self.properties):
+            return []
+        df = jdbc_to_df(
+            self.spark, self.url, f"SELECT * FROM {self.table}",
+            properties=self.properties,
+        )
+        return [tuple(r) for r in df.select(*_columns(self.schema)).collect()]
+
+
 class Runner:
     """Scheduler + execution-record keeper for a set of ScriptTasks."""
 
@@ -145,9 +243,9 @@ class Runner:
         records_table: str = "execution_records",
         jdbc_properties: dict[str, str] | None = None,
     ) -> None:
-        """``records_path`` is the parquet records table; passing
-        ``records_jdbc_url`` instead persists records to a database
-        table like the reference's JDO-backed RecordDao
+        """``records_path`` is the directory of JSON-line execution
+        records; passing ``records_jdbc_url`` instead persists records
+        to a database table like the reference's JDO-backed RecordDao
         (records/RecordDao.scala:19-22 writes MySQL)."""
         self.spark = spark
         self.records_path = records_path
@@ -158,171 +256,71 @@ class Runner:
         self.src_table = records_table + "_src"
         self.last_result: dict[str, Any] = {}
         self.last_started: dict[str, float] = {}
-        self._known_src: set[str] = set()
         self._stop = False
-        self._jdbc_src_sha_ok = False
-        if self.records_jdbc_url is not None:
-            self._ensure_jdbc_src_sha()
-        try:
-            self._known_src = {
-                r.src_sha for r in self.script_sources().select("src_sha").collect()
-            }
-        except Exception:
-            pass  # no source snapshots yet
-        # Recover last-start times from the records table so interval
-        # throttling survives runner restarts (reference looks up the
-        # last execution record: records/RecordDao.scala:85-90,
-        # hive/HiveBeeLine.scala:218-224). 'running' rows count: a run
-        # that crashed mid-task still consumed its interval slot.
-        try:
-            from pyspark.sql import functions as F
-
-            for row in (
-                self.records()
-                .groupBy("path")
-                .agg(F.max("started_at").alias("ms"))
-                .collect()
-            ):
-                self.last_started[row.path] = row.ms / 1000.0
-            self._fail_orphans()
-        except Exception:
-            pass  # no records yet
+        # Only an absent directory or table means "no records yet";
+        # records that cannot be read raise.
+        if records_jdbc_url is None:
+            self._records = _JsonLines(spark, records_path, RECORD_SCHEMA)
+            self._sources = _JsonLines(spark, self.src_path, SRC_SCHEMA)
+        else:
+            url, props = records_jdbc_url, self.jdbc_properties
+            self._records = _JdbcTable(spark, url, records_table, props, RECORD_SCHEMA)
+            self._sources = _JdbcTable(spark, url, self.src_table, props, SRC_SCHEMA)
+        self._known_src = {r[0] for r in self._sources.rows()}
+        self._recover(self._records.rows())
 
     # -- records ---------------------------------------------------------
-    def _ensure_jdbc_src_sha(self) -> None:
-        """Upgrade a pre-src_sha JDBC records table in place.
+    def _recover(self, rows: list[tuple]) -> None:
+        """Recover last-start times so interval throttling survives
+        runner restarts (reference looks up the last execution record:
+        records/RecordDao.scala:85-90, hive/HiveBeeLine.scala:218-224).
+        'running' rows count: a run that crashed mid-task still
+        consumed its interval slot.
 
-        The parquet path handles schema drift with mergeSchema, but a
-        JDBC table created before the src_sha column existed would
-        fail both the widened 7-column append and _fail_orphans'
-        ``select('src_sha')``. ALTER TABLE ADD COLUMN once on first
-        touch (Derby and MySQL syntax agree); a missing table means
-        the first append creates it already widened."""
-        if self._jdbc_src_sha_ok:
-            return
-        from data_misc_tools_spark.sources.jdbc import exec_update, jdbc_to_df
-
-        try:
-            cols = jdbc_to_df(
-                self.spark, self.records_jdbc_url,
-                f"SELECT * FROM {self.records_table} WHERE 1=0",
-                properties=self.jdbc_properties,
-            ).columns
-        except Exception:
-            self._jdbc_src_sha_ok = True  # no table yet
-            return
-        if "src_sha" not in {c.lower() for c in cols}:
-            exec_update(
-                self.spark, self.records_jdbc_url,
-                f"ALTER TABLE {self.records_table} ADD COLUMN src_sha VARCHAR(64)",
-                properties=self.jdbc_properties,
-            )
-        self._jdbc_src_sha_ok = True
+        Then mark crash-orphaned runs failed: a 'running' start row
+        with no completion row for the same (path, started_at) means
+        the previous runner died mid-task (reference: the execution
+        record written at start and finalized at finish,
+        process/ScriptHelper.scala:143-156)."""
+        done = {(p, s) for p, _, s, _, status, _, _ in rows if status != "running"}
+        now_ms = int(time.time() * 1000)
+        for path, script_type, started_ms, _, status, _, src_sha in rows:
+            last = self.last_started.get(path, 0.0)
+            self.last_started[path] = max(last, started_ms / 1000.0)
+            if status == "running" and (path, started_ms) not in done:
+                done.add((path, started_ms))
+                self._records.append((
+                    path, script_type, started_ms, now_ms, "failed",
+                    "crashed: no completion record (runner restart)", src_sha,
+                ))
 
     def _record(
         self, task: ScriptTask, started: float, finished: float, status: str,
         result: Any, src_sha: str | None = None,
     ) -> None:
-        self._append_row(
-            task.path,
-            task.script_type,
-            int(started * 1000),
-            int(finished * 1000),
-            status,
-            str(result)[:4000],
-            src_sha,
-        )
-
-    def _append_row(
-        self, path: str, script_type: str, started_ms: int, finished_ms: int,
-        status: str, result: str, src_sha: str | None = None,
-    ) -> None:
-        row = [(path, script_type, started_ms, finished_ms, status, result, src_sha)]
-        df = self.spark.createDataFrame(row, RECORD_SCHEMA).coalesce(1)
-        if self.records_jdbc_url is not None:
-            from data_misc_tools_spark.sources.jdbc import df_to_jdbc
-
-            df_to_jdbc(
-                df, self.records_jdbc_url, self.records_table,
-                mode="append", properties=self.jdbc_properties,
-            )
-        else:
-            df.write.mode("append").parquet(self.records_path)
+        self._records.append((
+            task.path, task.script_type, int(started * 1000),
+            int(finished * 1000), status, str(result)[:4000], src_sha,
+        ))
 
     def records(self):
-        if self.records_jdbc_url is not None:
-            from data_misc_tools_spark.sources.jdbc import jdbc_to_df
-
-            return jdbc_to_df(
-                self.spark, self.records_jdbc_url,
-                f"SELECT * FROM {self.records_table}",
-                properties=self.jdbc_properties,
-            )
-        # mergeSchema: pre-src_sha records tables lack the column;
-        # mixed files must still read as one relation
-        return self.spark.read.option("mergeSchema", "true").parquet(
-            self.records_path
-        )
+        """The execution records as a DataFrame of ``RECORD_SCHEMA``."""
+        return self.spark.createDataFrame(self._records.rows(), RECORD_SCHEMA)
 
     def script_sources(self):
         """The (src_sha, path, content, first_seen_ms) snapshot table:
         join records.src_sha against it to recover the exact script
         text any run executed."""
-        if self.records_jdbc_url is not None:
-            from data_misc_tools_spark.sources.jdbc import jdbc_to_df
-
-            return jdbc_to_df(
-                self.spark, self.records_jdbc_url,
-                f"SELECT * FROM {self.src_table}",
-                properties=self.jdbc_properties,
-            )
-        return self.spark.read.parquet(self.src_path)
+        return self.spark.createDataFrame(self._sources.rows(), SRC_SCHEMA)
 
     def _snapshot_source(self, task: ScriptTask) -> str:
         """Persist the current script content once per distinct sha;
         returns the sha for the execution record."""
         sha, content = task.source_snapshot()
-        if sha in self._known_src:
-            return sha
-        row = [(sha, task.path, content, int(time.time() * 1000))]
-        df = self.spark.createDataFrame(row, SRC_SCHEMA).coalesce(1)
-        if self.records_jdbc_url is not None:
-            from data_misc_tools_spark.sources.jdbc import df_to_jdbc
-
-            df_to_jdbc(
-                df, self.records_jdbc_url, self.src_table,
-                mode="append", properties=self.jdbc_properties,
-            )
-        else:
-            df.write.mode("append").parquet(self.src_path)
-        self._known_src.add(sha)
+        if sha not in self._known_src:
+            self._sources.append((sha, task.path, content, int(time.time() * 1000)))
+            self._known_src.add(sha)
         return sha
-
-    def _fail_orphans(self) -> None:
-        """Mark crash-orphaned runs failed: a 'running' start row with
-        no completion row for the same (path, started_at) means the
-        previous runner died mid-task (reference: the execution record
-        written at start and finalized at finish,
-        process/ScriptHelper.scala:143-156 — a crash leaves it
-        unfinished, and the restarted runner must both see the start
-        for throttling and record the failure)."""
-        recs = self.records()
-        done = recs.filter(recs.status != "running").select(
-            "path", "started_at"
-        )
-        orphans = (
-            recs.filter(recs.status == "running")
-            .select("path", "script_type", "started_at", "src_sha")
-            .join(done, ["path", "started_at"], "left_anti")
-            .collect()
-        )
-        now_ms = int(time.time() * 1000)
-        for o in orphans:
-            self._append_row(
-                o.path, o.script_type, o.started_at, now_ms,
-                "failed", "crashed: no completion record (runner restart)",
-                o.src_sha,
-            )
 
     # -- scheduling ------------------------------------------------------
     def is_ready(self, task: ScriptTask, now: float | None = None) -> bool:

@@ -118,7 +118,9 @@ def checkpoint_interpreted(df):
     checkpoint, bit-identical output). Confs are restored in a
     ``finally`` — the eager checkpoint executes inside the scope, so
     nothing else plans under the override. Use ONLY for bounded demo
-    frames; codegen wins on real row counts."""
+    frames; codegen wins on real row counts. Assumes no concurrent
+    planning: the confs are session-global, so a query planned from
+    another thread during the checkpoint would plan under NO_CODEGEN."""
     spark = df.sparkSession
     prev_ws = spark.conf.get("spark.sql.codegen.wholeStage", "true")
     prev_fm = spark.conf.get("spark.sql.codegen.factoryMode", "FALLBACK")

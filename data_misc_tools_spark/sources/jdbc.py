@@ -16,6 +16,7 @@ deps), which is correct for control-plane statements.
 
 from __future__ import annotations
 
+from py4j.protocol import Py4JJavaError
 from pyspark.sql import DataFrame, SparkSession
 
 
@@ -80,16 +81,31 @@ def exec_update(spark: SparkSession, url: str, sql: str, properties: dict[str, s
     ``execUpdate``): returns the update count. Uses the JVM's
     DriverManager through py4j — requires the JDBC driver jar on the
     Spark classpath, like any JDBC use."""
+    conn = _connect(spark, url, properties)
+    try:  # closing the connection closes its statements
+        return conn.createStatement().executeUpdate(sql)
+    finally:
+        conn.close()
+
+
+def table_exists(
+    spark: SparkSession, url: str, table: str, properties: dict[str, str] | None = None
+) -> bool:
+    """Spark's ``JdbcUtils.tableExists`` probe on the driver; a failure
+    to connect still raises."""
+    conn = _connect(spark, url, properties)
+    try:
+        conn.createStatement().executeQuery(f"SELECT * FROM {table} WHERE 1=0")
+        return True
+    except Py4JJavaError:
+        return False
+    finally:
+        conn.close()
+
+
+def _connect(spark: SparkSession, url: str, properties: dict[str, str] | None):
     jvm = spark.sparkContext._jvm
     props = jvm.java.util.Properties()
     for k, v in (properties or {}).items():
         props.setProperty(k, v)
-    conn = jvm.java.sql.DriverManager.getConnection(url, props)
-    try:
-        stmt = conn.createStatement()
-        try:
-            return stmt.executeUpdate(sql)
-        finally:
-            stmt.close()
-    finally:
-        conn.close()
+    return jvm.java.sql.DriverManager.getConnection(url, props)

@@ -157,9 +157,9 @@ class IncrementalDedupSink:
         # separate batch checkpoint is gone too. The empty-batch guard
         # reads the PINNED frame (r11): the old ``batch.take(1)``
         # pre-check was a second job over the batch source per
-        # micro-batch; hashing an empty batch is free and an empty
-        # band table implies an empty batch (every non-empty doc row
-        # yields >= 1 band row, and the checkpoint is already paid).
+        # micro-batch; hashing an empty batch is free. Every doc with
+        # len(text) >= k yields >= 1 band row; shorter docs are invisible
+        # to the pipeline in either form, so they may return here too.
         bands_b = D.minhash_band_table(b, **self.kw).localCheckpoint()
         if not bands_b.take(1):
             return

@@ -1,11 +1,18 @@
 """Scheduled runner: hot reload, interval throttle, records, result feedback."""
 
+import json
 import os
 import time
+import uuid
 
 import pytest
 
-from data_misc_tools_spark.runner import Runner, ScriptTask, parse_iso_duration
+from data_misc_tools_spark.runner import (
+    RECORD_SCHEMA,
+    Runner,
+    ScriptTask,
+    parse_iso_duration,
+)
 
 
 def test_parse_iso_duration():
@@ -186,3 +193,112 @@ def test_script_source_versions_are_auditable(spark, tmp_path):
     runner2 = Runner(spark, str(tmp_path / "records"))
     assert runner2.run_once(t, force=True) == "v2"
     assert runner2.script_sources().count() == 2
+
+
+def _record_line(path="a.py", started_at=1000, status="succeeded"):
+    return json.dumps({
+        "path": path, "script_type": "py", "started_at": started_at,
+        "finished_at": started_at + 1, "status": status, "result": "1",
+        "src_sha": None,
+    })
+
+
+def test_corrupt_record_line_fails_loudly(spark, tmp_path):
+    """An unparseable line that is not the last line of its file is
+    corrupt state: Runner() must raise, not start with throttling off."""
+    records = tmp_path / "records"
+    records.mkdir()
+    (records / "0-a.jsonl").write_text(
+        _record_line() + "\n{not json\n" + _record_line() + "\n"
+    )
+    with pytest.raises(ValueError, match="corrupt"):
+        Runner(spark, str(records))
+
+
+def test_torn_last_line_is_skipped(spark, tmp_path):
+    """A last line with no trailing newline is a write the previous
+    runner died in the middle of: it is skipped, the rest recovers."""
+    records = tmp_path / "records"
+    records.mkdir()
+    line = _record_line(started_at=5000)
+    (records / "0-a.jsonl").write_text(line + "\n" + line[:25])
+    r = Runner(spark, str(records))
+    assert r.last_started == {"a.py": 5.0}
+    assert r.records().count() == 1
+
+
+def test_old_parquet_records_are_refused(spark, tmp_path):
+    records = str(tmp_path / "records")
+    spark.createDataFrame(
+        [("a.py", "py", 1, 2, "succeeded", "1", None)], RECORD_SCHEMA
+    ).write.parquet(records)
+    with pytest.raises(ValueError, match="parquet"):
+        Runner(spark, records)
+
+
+def test_records_on_a_file_system_that_cannot_append(spark, tmp_path, monkeypatch):
+    """S3A creates files but refuses append with
+    UnsupportedOperationException: each later record goes to its own
+    file, and throttle recovery and orphan marking still work."""
+    from pyspark.errors import UnsupportedOperationException
+
+    from data_misc_tools_spark.sources import fs
+
+    create_only = fs.append_text
+
+    def refusing_append(spark, path, content):
+        if fs.exists(spark, path):
+            raise UnsupportedOperationException("Append is not supported")
+        create_only(spark, path, content)
+
+    monkeypatch.setattr(fs, "append_text", refusing_append)
+    ok = tmp_path / "ok.py"
+    _write_script(ok, "def run(spark, param):\n    return 'ok'\n")
+    crash = tmp_path / "crash.py"
+    _write_script(crash, "def run(spark, param):\n    raise KeyboardInterrupt\n")
+    records = str(tmp_path / "records")
+    r1 = Runner(spark, records)
+    t_ok = ScriptTask(str(ok), interval="PT1H")
+    t_crash = ScriptTask(str(crash), interval="PT1H")
+    assert r1.run_once(t_ok) == "ok"
+    with pytest.raises(KeyboardInterrupt):
+        r1.run_once(t_crash)
+    assert len([n for n in os.listdir(records) if n.endswith(".jsonl")]) == 3
+
+    r2 = Runner(spark, records)  # restart
+    assert not r2.is_ready(t_ok) and not r2.is_ready(t_crash)
+    crashed = r2.records().filter(f"path = '{crash}'").orderBy("finished_at")
+    assert [r.status for r in crashed.collect()] == ["running", "failed"]
+    r3 = Runner(spark, records)  # no double marking
+    assert r3.records().filter(f"path = '{crash}'").count() == 2
+
+
+def _jobs_started(spark, fn) -> int:
+    sc = spark.sparkContext
+    group = f"runner-bookkeeping-{uuid.uuid4().hex}"
+    sc.setJobGroup(group, group)
+    try:
+        fn()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    return len(sc.statusTracker().getJobIdsForGroup(group))
+
+
+def test_bookkeeping_starts_no_spark_job(spark, tmp_path):
+    """Records and source snapshots are driver-side rows: neither a
+    run_once of a pure-Python task nor a Runner() over filled records
+    (with a crash orphan to mark) starts a Spark job."""
+    script = tmp_path / "task.py"
+    _write_script(script, "def run(spark, param):\n    return (param or 0) + 1\n")
+    crash = tmp_path / "crash.py"
+    _write_script(crash, "def run(spark, param):\n    raise KeyboardInterrupt\n")
+    records = str(tmp_path / "records")
+    runner = Runner(spark, records)
+    t = ScriptTask(str(script), interval="PT0S")
+    assert _jobs_started(spark, lambda: runner.run_once(t)) == 0
+    for _ in range(3):
+        assert _jobs_started(spark, lambda: runner.run_once(t)) == 0
+    with pytest.raises(KeyboardInterrupt):
+        runner.run_once(ScriptTask(str(crash)))
+    assert _jobs_started(spark, lambda: Runner(spark, records)) == 0
+    assert runner.last_result[str(script)] == 4

@@ -35,7 +35,14 @@ def main() -> int:
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", ".scratch/sf1")
     cpus = os.environ.get("SPARK_GRAFT_CPUS", "32")
 
-    from bench import _cpu_probe, _jvm_canary_point, _jvm_canary_shot, _py_warm
+    from bench import (
+        CANARY_HIGH,
+        CANARY_LOW,
+        _cpu_probe,
+        _jvm_canary_point,
+        _jvm_canary_shot,
+        _py_warm,
+    )
     from data_misc_tools_spark.catalog import QUERIES
     from data_misc_tools_spark.session import build_session, load_tables
 
@@ -87,7 +94,7 @@ def main() -> int:
             "pass2_sec": canary2,
             "ratio": ratio,
             "verdict": "clean"
-            if ratio is not None and 0.60 <= ratio <= 1.15
+            if ratio is not None and CANARY_LOW <= ratio <= CANARY_HIGH
             else "noisy",
         },
     }
