@@ -6,13 +6,15 @@ almost everything registers as a Spark *SQL UDF* (``CREATE TEMPORARY
 FUNCTION ... RETURNS ... RETURN <expr>``, Spark 4) — those are inlined
 into the Catalyst plan at analysis time, so they cost nothing at run
 time and stay inside WholeStageCodegen. Only genuinely side-effecting
-functions (HTTP) register as Python UDFs, marked nondeterministic so
-Catalyst never collapses, reorders, or double-executes the calls
+functions (HTTP) register as Python code: scalar-iterator pandas UDFs
+over Arrow batches, each task sharing one keep-alive client and one
+thread pool (operators.http.request_batches), marked nondeterministic
+so Catalyst never collapses, reorders, or double-executes the calls
 (the reference marks these ``@UDFType(deterministic=false)``,
 e.g. hive-udfs/.../http/UDFHttpGet.java:30).
 """
 
-from __future__ import annotations
+from collections.abc import Iterator
 
 from pyspark.sql import SparkSession
 
@@ -143,19 +145,21 @@ def register_functions(spark: SparkSession) -> None:
 
 
 def _register_http(spark: SparkSession) -> None:
-    """Register scalar http_get / http_post Python UDFs (slow path —
-    the batch operators in operators.http are the recommended form)."""
-    from data_misc_tools_spark.operators.http import HTTP_RESULT_TYPE, http_call_once
+    """Register ``http_get(url[, timeout[, headers]])`` and
+    ``http_post(url[, timeout[, headers[, content]]])``, both returning
+    ``HTTP_RESULT_TYPE``."""
+    # Local import: the type hints below are evaluated here, and pandas
+    # is loaded only by sessions that register the functions.
+    import pandas as pd
+    from pyspark.sql.functions import pandas_udf
 
-    def _get(url, timeout=3000, headers=None):
-        return http_call_once("GET", url, timeout_ms=timeout or 3000, headers=headers)
+    from data_misc_tools_spark.operators.http import HTTP_RESULT_TYPE, request_batches
 
-    def _post(url, timeout=3000, headers=None, content=None):
-        return http_call_once(
-            "POST", url, timeout_ms=timeout or 3000, headers=headers, body=content
-        )
+    def _get(batches: Iterator[tuple[pd.Series, ...]]) -> Iterator[pd.DataFrame]:
+        return request_batches("GET", batches)
 
-    from pyspark.sql.functions import udf
+    def _post(batches: Iterator[tuple[pd.Series, ...]]) -> Iterator[pd.DataFrame]:
+        return request_batches("POST", batches)
 
-    spark.udf.register("http_get", udf(_get, HTTP_RESULT_TYPE).asNondeterministic())
-    spark.udf.register("http_post", udf(_post, HTTP_RESULT_TYPE).asNondeterministic())
+    for name, fn in (("http_get", _get), ("http_post", _post)):
+        spark.udf.register(name, pandas_udf(fn, HTTP_RESULT_TYPE).asNondeterministic())

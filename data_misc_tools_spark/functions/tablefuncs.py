@@ -23,9 +23,12 @@ Design notes:
   of the reference's Hive UDTFs. Bulk enrichment should use the
   mapInPandas operators (one client + thread pool per partition);
   these bindings exist for SQL ergonomics and small/medium fan-outs.
-- One UDTF class instance is created per partition, so instance state
-  gives the reference's one-client-per-task amortization: clients
-  open lazily on first ``eval`` and close in ``terminate``.
+- One UDTF class instance is created per task, so instance state
+  gives the reference's one-client-per-task amortization: the HTTP
+  functions hold one keep-alive ``operators.http.HttpClient``, created
+  in ``__init__`` and closed in ``cleanup`` (which PySpark runs in a
+  ``finally`` after ``terminate``, so also when evaluation fails); the
+  Redis/ZooKeeper clients open lazily on first ``eval``.
 - Connectivity is factory-injected at registration (the pydatasource
   idiom): HTTP needs none; Redis/ZooKeeper functions are registered
   only when a client factory is supplied (real clients are
@@ -33,8 +36,16 @@ Design notes:
   file-backed/in-memory fakes in testing/ keep the executor-side
   plumbing real).
 - Python UDTFs are nondeterministic by DEFAULT in Spark 4.1 (the API
-  offers ``asDeterministic``, not the reverse), which is the right
-  marking for every function here; errors become data rows
+  offers ``asDeterministic``, not the reverse). ``t_http_get`` alone is
+  marked deterministic, a departure from the reference's
+  ``deterministic=false``: GET is safe and idempotent (RFC 9110 §9.2),
+  and only a deterministic UDTF lets Catalyst push a filter on the
+  outer table below the LATERAL join — an outer ``WHERE id < 10`` over
+  1,000 rows sends 10 requests instead of 1,000. The price is that a
+  CTE referenced twice is inlined twice and sends its GETs twice.
+  ``t_http_post`` stays nondeterministic, so a POST is sent exactly as
+  often as the query reads the CTE (once), and so do ``jd_keys``,
+  ``jd_mget`` and ``zk_read``. Errors become data rows
   ``(code=-1, content=<message>)``, never task failures
   (reference: http/HttpHelper.java:53-59).
 """
@@ -47,7 +58,11 @@ from typing import Callable
 from pyspark.sql import SparkSession
 from pyspark.sql.functions import udtf
 
-from data_misc_tools_spark.operators.http import HTTP_RESULT_TYPE, http_call_once
+from data_misc_tools_spark.operators.http import (
+    DEFAULT_TIMEOUT_MS,
+    HTTP_RESULT_TYPE,
+    HttpClient,
+)
 
 
 def _parse_headers(headers_json: str | None) -> dict[str, str] | None:
@@ -58,13 +73,17 @@ def _parse_headers(headers_json: str | None) -> dict[str, str] | None:
 
 def make_http_get_udtf():
     """UDTF class for ``t_http_get(url[, timeout_ms[, headers_json]])``
-    → one row ``(code, headers, content)`` per call."""
+    → one row ``(code, headers, content)`` per call; deterministic (see
+    the module docstring)."""
 
     class THttpGet:
+        def __init__(self) -> None:
+            self._client = HttpClient()
+
         def eval(
             self,
             url: str,
-            timeout_ms: int = 3000,
+            timeout_ms: int = DEFAULT_TIMEOUT_MS,
             headers_json: str | None = None,
         ):
             try:
@@ -72,12 +91,12 @@ def make_http_get_udtf():
             except Exception as e:  # bad headers JSON -> error-as-data
                 yield (-1, None, f"bad headers_json: {e}")
                 return
-            code, rh, content = http_call_once(
-                "GET", url, timeout_ms=timeout_ms or 3000, headers=hdrs
-            )
-            yield (code, rh, content)
+            yield self._client.request("GET", url, timeout_ms or DEFAULT_TIMEOUT_MS, hdrs)
 
-    return udtf(THttpGet, returnType=HTTP_RESULT_TYPE)
+        def cleanup(self) -> None:
+            self._client.close()
+
+    return udtf(THttpGet, returnType=HTTP_RESULT_TYPE).asDeterministic()
 
 
 def make_http_post_udtf():
@@ -85,11 +104,14 @@ def make_http_post_udtf():
     headers_json]])`` → one row ``(code, headers, content)``."""
 
     class THttpPost:
+        def __init__(self) -> None:
+            self._client = HttpClient()
+
         def eval(
             self,
             url: str,
             body: str | None = None,
-            timeout_ms: int = 3000,
+            timeout_ms: int = DEFAULT_TIMEOUT_MS,
             headers_json: str | None = None,
         ):
             try:
@@ -97,10 +119,12 @@ def make_http_post_udtf():
             except Exception as e:
                 yield (-1, None, f"bad headers_json: {e}")
                 return
-            code, rh, content = http_call_once(
-                "POST", url, timeout_ms=timeout_ms or 3000, headers=hdrs, body=body
+            yield self._client.request(
+                "POST", url, timeout_ms or DEFAULT_TIMEOUT_MS, hdrs, body
             )
-            yield (code, rh, content)
+
+        def cleanup(self) -> None:
+            self._client.close()
 
     return udtf(THttpPost, returnType=HTTP_RESULT_TYPE)
 

@@ -1,38 +1,54 @@
-"""HTTP enrichment operators.
+"""HTTP enrichment: the one HTTP client core and the batch operators.
 
-Reference surface: scalar ``http_get``/``http_post`` UDFs (one client
-per row — the reference itself documents this as an anti-pattern,
-README.md:96-105) and ``t_http_get``/``t_http_post`` UDTFs that share
-one client per task and append a context column to every output row
-(reference: hive-udfs/.../http/UDTFHttpGet.java:29-105,
-commons/UDTFExt.java:22-36).
+Reference surface: scalar ``http_get``/``http_post`` UDFs and
+``t_http_get``/``t_http_post`` UDTFs that share one client per task and
+append a context column to every output row (reference:
+hive-udfs/.../http/UDFHttpGet.java:97, http/UDTFHttpGet.java:29-105,
+commons/UDTFExt.java:22-36). The reference's README calls a client per
+row an anti-pattern (README.md:96-105).
 
-Spark-first design: the batch operators below run via ``mapInPandas``
-— one Arrow batch iterator per partition, with the HTTP connection
-pool opened before the first batch and closed in a ``finally`` — which
-is exactly the per-task amortization the reference invented UDTFs for.
-"ctx" passthrough is free: all input columns are carried through to
-the output schema unchanged, with the response struct appended.
+Every HTTP request of the engine goes through :class:`HttpClient`: one
+persistent HTTP/1.1 connection per thread and per (scheme, host, port),
+opened on first use and closed by ``close`` at task end. Its three
+users each hold one client per task:
+
+- the batch operators below run via ``mapInPandas`` — one Arrow batch
+  iterator per partition, with one client and one thread pool opened
+  before the first batch and closed in a ``finally``; "ctx"
+  passthrough is free: all input columns are carried through to the
+  output schema unchanged, with the response struct appended;
+- the SQL ``t_http_get``/``t_http_post`` UDTFs (functions.tablefuncs);
+- the SQL ``http_get``/``http_post`` scalar pandas UDFs
+  (functions.registry), through :func:`request_batches`.
 
 Error channel parity: failures become data rows ``(code=-1, headers
 NULL, content=<error message>)``, never task failures (reference:
-hive-udfs/.../http/HttpHelper.java:53-59).
+hive-udfs/.../http/HttpHelper.java:53-59). Non-2xx answers are data
+rows with their real code.
+
+Retries: none, except that a GET whose reused keep-alive connection
+turns out closed by the server is sent once more on a new connection.
+A POST is never sent twice. GET follows up to 10 redirects; a POST
+returns the 3xx as its row. Proxy environment variables are ignored:
+every request connects to the URL's host directly.
 
 At 100 TB scale: HTTP calls are the bottleneck, not Spark — the
 operator exposes ``concurrency`` (threads per partition) and callers
-control total parallelism with ``df.repartition(n)``. There is no
-retry: each call runs once with a timeout, so a dead endpoint degrades
-to error rows instead of hanging executors.
+control total parallelism with ``df.repartition(n)``. Each call runs
+with a timeout, so a dead endpoint degrades to error rows instead of
+hanging executors.
 """
 
 from __future__ import annotations
 
-import io
-import json
-import urllib.error
-import urllib.request
+import http.client
+import select
+import ssl
+import threading
 from collections.abc import Iterator
 from concurrent.futures import ThreadPoolExecutor
+from itertools import repeat
+from urllib.parse import urljoin, urlsplit
 
 from pyspark.sql import DataFrame
 from pyspark.sql.types import (
@@ -51,34 +67,156 @@ HTTP_RESULT_TYPE = StructType([
     StructField("content", StringType()),
 ])
 
+DEFAULT_TIMEOUT_MS = 3000
+DEFAULT_CONCURRENCY = 8  # threads per task
+_MAX_REDIRECTS = 10  # as urllib's HTTPRedirectHandler
+_REDIRECT_CODES = frozenset((301, 302, 303, 307, 308))
+_USER_AGENT = "data-misc-tools-spark"
+
+Result = tuple[int, dict[str, str] | None, str | None]
+
+
+class HttpClient:
+    """Keep-alive HTTP/1.1 client shared by the threads of one task.
+
+    Each thread gets its own persistent connection per (scheme, host,
+    port), opened lazily; ``close`` closes every connection the client
+    opened (the client stays usable and reconnects on demand). HTTPS
+    uses the default certificate verification. :meth:`request` never
+    raises: a failure is a ``(-1, None, message)`` row.
+    """
+
+    def __init__(self) -> None:
+        self._local = threading.local()
+        self._lock = threading.Lock()
+        self._opened: list[http.client.HTTPConnection] = []
+        self._tls: ssl.SSLContext | None = None
+
+    def __enter__(self) -> HttpClient:
+        return self
+
+    def __exit__(self, *exc) -> None:
+        self.close()
+
+    def close(self) -> None:
+        with self._lock:
+            for conn in self._opened:
+                conn.close()
+
+    def request(
+        self,
+        method: str,
+        url: str | None,
+        timeout_ms: int = DEFAULT_TIMEOUT_MS,
+        headers: dict[str, str] | None = None,
+        body: str | None = None,
+    ) -> Result:
+        """One request → ``(code, headers, content)``; errors are data."""
+        if url is None:
+            return (-1, None, "null url")
+        hdrs = {"User-Agent": _USER_AGENT, **(headers or {})}
+        data = None
+        if body is not None:
+            data = body.encode("utf-8")
+            if not any(k.lower() == "content-type" for k in hdrs):
+                hdrs["Content-Type"] = "application/x-www-form-urlencoded"  # as urllib
+        try:
+            for _ in range(_MAX_REDIRECTS + 1):
+                code, rh, content = self._send(method, url, timeout_ms / 1000.0, hdrs, data)
+                location = rh.get("Location")
+                if method != "GET" or code not in _REDIRECT_CODES or location is None:
+                    break
+                url = urljoin(url, location)
+            return (code, dict(rh.items()), content.decode("utf-8", errors="replace"))
+        except Exception as e:  # connection errors -> error-as-data row
+            return (-1, None, f"{type(e).__name__}: {e}")
+
+    def _send(self, method, url, timeout_s, headers, data):
+        parts = urlsplit(url)
+        if parts.scheme not in ("http", "https") or not parts.hostname:
+            raise ValueError(f"unsupported URL {url!r}")
+        target = (parts.path or "/") + (f"?{parts.query}" if parts.query else "")
+        key = (parts.scheme, parts.hostname, parts.port)
+        while True:
+            conn = self._connection(key, timeout_s)
+            reused = conn.sock is not None
+            try:
+                conn.request(method, target, body=data, headers=headers)
+                resp = conn.getresponse()
+                return resp.status, resp.headers, resp.read()
+            except ConnectionError:
+                conn.close()
+                # The server closed a reused connection before answering:
+                # a GET is sent once more, on a new connection (which is
+                # not reused, so there is no third try); a POST never is.
+                if not (reused and method == "GET"):
+                    raise
+            except BaseException:
+                conn.close()
+                raise
+
+    def _connection(self, key: tuple, timeout_s: float) -> http.client.HTTPConnection:
+        conns = getattr(self._local, "conns", None)
+        if conns is None:
+            conns = self._local.conns = {}
+        conn = conns.get(key)
+        if conn is None:
+            scheme, host, port = key
+            if scheme == "https":
+                if self._tls is None:
+                    self._tls = ssl.create_default_context()
+                conn = http.client.HTTPSConnection(host, port, context=self._tls)
+            else:
+                conn = http.client.HTTPConnection(host, port)
+            conns[key] = conn
+            with self._lock:
+                self._opened.append(conn)
+        elif conn.sock is not None and select.select([conn.sock], [], [], 0)[0]:
+            # An idle keep-alive socket is readable only when the server
+            # closed it (or broke protocol): open a new one before sending.
+            conn.close()
+        conn.timeout = timeout_s
+        if conn.sock is not None:
+            conn.sock.settimeout(timeout_s)
+        return conn
+
 
 def http_call_once(
     method: str,
     url: str | None,
-    timeout_ms: int = 3000,
+    timeout_ms: int = DEFAULT_TIMEOUT_MS,
     headers: dict[str, str] | None = None,
     body: str | None = None,
-) -> tuple[int, dict[str, str] | None, str | None]:
-    """One HTTP request → ``(code, headers, content)``; errors are data."""
-    if url is None:
-        return (-1, None, "null url")
-    req = urllib.request.Request(url, method=method.upper())
-    for k, v in (headers or {}).items():
-        req.add_header(k, v)
-    data = body.encode("utf-8") if body is not None else None
-    try:
-        with urllib.request.urlopen(req, data=data, timeout=timeout_ms / 1000.0) as resp:
-            content = resp.read().decode("utf-8", errors="replace")
-            hdrs = {k: v for k, v in resp.headers.items()}
-            return (int(resp.status), hdrs, content)
-    except urllib.error.HTTPError as e:  # non-2xx still has a real code/body
-        try:
-            content = e.read().decode("utf-8", errors="replace")
-        except Exception:
-            content = str(e)
-        return (int(e.code), {k: v for k, v in (e.headers or {}).items()}, content)
-    except Exception as e:  # connection errors -> error-as-data row
-        return (-1, None, f"{type(e).__name__}: {e}")
+) -> Result:
+    """One request on a connection of its own, closed after the call."""
+    with HttpClient() as client:
+        return client.request(method, url, timeout_ms, headers, body)
+
+
+def _request_all(client, pool, method, urls, timeouts, headers, bodies) -> list[Result]:
+    return list(pool.map(lambda a: client.request(method, *a), zip(urls, timeouts, headers, bodies)))
+
+
+def request_batches(method: str, batches: Iterator) -> Iterator:
+    """Body of the scalar-iterator pandas UDFs ``http_get(url[, timeout[,
+    headers]])`` and ``http_post(url[, timeout[, headers[, content]]])``:
+    each batch of argument Series becomes a DataFrame of
+    ``HTTP_RESULT_TYPE`` rows, on one client and one thread pool per
+    task. A NULL (or 0) timeout means ``DEFAULT_TIMEOUT_MS``."""
+    import pandas as pd
+
+    max_args = 4 if method == "POST" else 3
+    with HttpClient() as client, ThreadPoolExecutor(DEFAULT_CONCURRENCY) as pool:
+        for cols in batches:
+            cols = (cols,) if isinstance(cols, pd.Series) else tuple(cols)
+            if len(cols) > max_args:
+                raise TypeError(f"http_{method.lower()} takes at most {max_args} arguments")
+            n = len(cols[0])
+            urls, timeouts, headers, bodies = [c.tolist() for c in cols] + [[None] * n] * (4 - len(cols))
+            # NaN (a NULL in a nullable integer column) != NaN
+            timeouts = [int(t) if t and t == t else DEFAULT_TIMEOUT_MS for t in timeouts]
+            results = _request_all(client, pool, method, urls, timeouts, headers, bodies)
+            yield pd.DataFrame(results, columns=[f.name for f in HTTP_RESULT_TYPE.fields])
 
 
 def _batch_http(
@@ -98,21 +236,14 @@ def _batch_http(
     cols = [f.name for f in df.schema.fields]
 
     def run(batches: Iterator) -> Iterator:
-        import pandas as pd
-
-        # one pool per partition == the reference's one-client-per-task
-        with ThreadPoolExecutor(max_workers=concurrency) as pool:
+        # one client + pool per partition == the reference's one-client-per-task
+        with HttpClient() as client, ThreadPoolExecutor(max_workers=concurrency) as pool:
             for pdf in batches:
                 urls = pdf[url_col].tolist()
-                hdrs = pdf[headers_col].tolist() if headers_col else [None] * len(urls)
-                bodies = pdf[body_col].tolist() if body_col else [None] * len(urls)
-                results = list(
-                    pool.map(
-                        lambda a: http_call_once(
-                            method, a[0], timeout_ms=timeout_ms, headers=a[1], body=a[2]
-                        ),
-                        zip(urls, hdrs, bodies),
-                    )
+                hdrs = pdf[headers_col].tolist() if headers_col else repeat(None)
+                bodies = pdf[body_col].tolist() if body_col else repeat(None)
+                results = _request_all(
+                    client, pool, method, urls, repeat(timeout_ms), hdrs, bodies
                 )
                 out = pdf[cols].copy()
                 out[result_col] = [
@@ -127,8 +258,8 @@ def t_http_get(
     df: DataFrame,
     url_col: str,
     headers_col: str | None = None,
-    timeout_ms: int = 3000,
-    concurrency: int = 8,
+    timeout_ms: int = DEFAULT_TIMEOUT_MS,
+    concurrency: int = DEFAULT_CONCURRENCY,
     result_col: str = "http_result",
 ) -> DataFrame:
     """Batch HTTP GET per row; appends ``result_col`` struct
@@ -150,8 +281,8 @@ def t_http_post(
     url_col: str,
     body_col: str,
     headers_col: str | None = None,
-    timeout_ms: int = 3000,
-    concurrency: int = 8,
+    timeout_ms: int = DEFAULT_TIMEOUT_MS,
+    concurrency: int = DEFAULT_CONCURRENCY,
     result_col: str = "http_result",
 ) -> DataFrame:
     """Batch HTTP POST; body taken per-row from ``body_col``."""

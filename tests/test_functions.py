@@ -127,6 +127,50 @@ def test_http_scalar_udfs_registered(spark):
     assert row.code == -1 and "refused" in row.content.lower()
 
 
+def test_http_scalar_udfs_against_echo_server(spark):
+    from data_misc_tools_spark.testing.httpserver import ensure_echo_server
+
+    base = f"http://127.0.0.1:{ensure_echo_server()}"
+    spark.createDataFrame(
+        [(1, f"{base}/a", 2000), (2, f"{base}/err/404", 2000), (3, None, 2000),
+         (4, f"{base}/n", None)],
+        "id int, url string, t int",
+    ).createOrReplaceTempView("_http_rows")
+    rows = {
+        r.id: r
+        for r in spark.sql(
+            "SELECT id, http_get(url) AS g1, http_get(url, t) AS g2, "
+            "http_get(url, t, map('X-Tag', '1')) AS g3, "
+            "http_post(url, t, map('Content-Type', 'text/plain'), 'BODY') AS p "
+            "FROM _http_rows"
+        ).collect()
+    }
+    for col in ("g1", "g2", "g3"):
+        assert (rows[1][col].code, rows[1][col].content) == (200, "a")
+        assert (rows[2][col].code, rows[2][col].content) == (404, "error")
+        assert (rows[3][col].code, rows[3][col].headers, rows[3][col].content) == (
+            -1, None, "null url"
+        )
+    assert (rows[1].p.code, rows[1].p.content) == (200, "a|BODY")
+    assert rows[1].g1.headers["Content-Type"].startswith("text/plain")
+    # a NULL timeout means the 3000 ms default, not "no timeout"
+    assert (rows[4].g2.code, rows[4].g2.content) == (200, "n")
+
+
+def test_http_scalar_udfs_are_batched_arrow_udfs(spark):
+    import warnings
+
+    from data_misc_tools_spark.functions.registry import _register_http
+
+    with warnings.catch_warnings(record=True) as caught:
+        warnings.simplefilter("always")
+        _register_http(spark)
+    assert not [w for w in caught if issubclass(w.category, UserWarning)]
+    plan = spark.sql("SELECT http_get(concat('x', id)) AS r FROM range(3)")._jdf \
+        .queryExecution().executedPlan().toString()
+    assert "ArrowEvalPython" in plan and "BatchEvalPython" not in plan
+
+
 def test_sql_text_functions_match_operators(spark):
     from data_misc_tools_spark.operators.text import fingerprint, token_count
 

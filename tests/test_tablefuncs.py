@@ -84,6 +84,38 @@ class TestHttpTableFunctions:
         assert bad.code == -1 and "headers_json" in bad.content
 
 
+    @pytest.mark.parametrize(
+        "call, counts",
+        [
+            # deterministic: the filter is pushed below the LATERAL join;
+            # the CTE is inlined twice, each copy filtered
+            ("t_http_get(t.url)", (10, 20, 250)),
+            # nondeterministic: every input row is called, the CTE once
+            ("t_http_post(t.url, 'b')", (1000, 1000, 250)),
+        ],
+    )
+    def test_lateral_pushdown_request_counts(self, spark, port, call, counts):
+        from data_misc_tools_spark.testing import httpserver
+
+        spark.range(0, 1000, 1, 4).selectExpr(
+            "id", f"concat('http://127.0.0.1:{port}/r', id) AS url"
+        ).createOrReplaceTempView("tf_push_t")
+        lateral = f"SELECT t.id, h.code FROM tf_push_t t, LATERAL {call} h"
+        queries = [
+            f"{lateral} WHERE t.id < 10",
+            f"WITH r AS ({lateral}) "
+            "SELECT * FROM r WHERE id < 10 UNION ALL SELECT * FROM r WHERE id < 10",
+            f"{lateral} LIMIT 10",
+        ]
+        got = []
+        for q, rows in zip(queries, (10, 20, 10)):
+            httpserver.reset()
+            out = spark.sql(q).collect()
+            assert len(out) == rows and all(r.code == 200 for r in out)
+            got.append(httpserver.stats()["requests"])
+        assert tuple(got) == counts
+
+
 class TestRedisTableFunctions:
     @pytest.fixture()
     def redis_bound(self, spark):
