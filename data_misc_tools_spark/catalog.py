@@ -613,11 +613,12 @@ def http_enrich(spark: SparkSession, sf_dir: str) -> DataFrame:
 def t_http_get_sql_demo(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The reference's headline SQL UX — ``t_http_get`` called INSIDE
     SQL with LATERAL fan-out and automatic ctx passthrough (reference:
-    README.md:119-126, commons/UDTFExt.java:22-36) — now bound via a
-    PySpark 4.1 Python UDTF (functions/tablefuncs.py, registered by
-    register_all). Oracle-exact against the deterministic loopback
-    echo server (GET /x returns body "x"). The doc filter lives in a
-    subquery so only the 24 requested rows ever reach the UDTF."""
+    README.md:119-126, commons/UDTFExt.java:22-36) — bound as a Spark
+    SQL table function over a batched GET pandas UDF
+    (functions/tablefuncs.py, registered by register_all), so it plans
+    as one ArrowEvalPython. Oracle-exact against the deterministic
+    loopback echo server (GET /x returns body "x"). Only the 24
+    requested docs ever reach the GET UDF."""
     from data_misc_tools_spark.testing.httpserver import ensure_echo_server
 
     port = ensure_echo_server()

@@ -1,4 +1,4 @@
-"""SQL-callable table functions (PySpark 4.1 ``@udtf``).
+"""SQL-callable table functions.
 
 The reference's headline UX is calling its UDTFs inside SQL with
 lateral-view fan-out — ``SELECT ... FROM t LATERAL VIEW
@@ -18,42 +18,50 @@ arguments work (``t_http_get(url => u, timeout_ms => 500)``).
 
 Design notes:
 
-- Python UDTFs evaluate ROW-AT-A-TIME in a Python worker — the slow
-  path by this repo's own standards, and exactly the per-row semantic
-  of the reference's Hive UDTFs. Bulk enrichment should use the
-  mapInPandas operators (one client + thread pool per partition);
-  these bindings exist for SQL ergonomics and small/medium fan-outs.
+- ``t_http_get`` is a Spark 4 SQL table function (``CREATE TEMPORARY
+  FUNCTION ... RETURNS TABLE``) whose body calls one deterministic
+  scalar-iterator pandas UDF. Catalyst inlines the body and
+  decorrelates the LATERAL join into one ``ArrowEvalPython`` over the
+  outer rows, so the GETs run in Arrow batches through
+  ``operators.http.request_batches``: one keep-alive client and
+  ``DEFAULT_CONCURRENCY`` threads per task, as for ``http_get``. A
+  Python UDTF cannot batch on Spark 4.1: under LATERAL its ``eval``
+  runs once per row and the worker consumes each row's output before
+  it reads the next row, so the requests of a task cannot overlap;
+  ``@arrow_udtf`` is refused under LATERAL
+  (``LATERAL_JOIN_WITH_ARROW_UDTF_UNSUPPORTED``), and rows yielded
+  from ``terminate`` join the last input row.
+- ``t_http_get`` is deterministic, a departure from the reference's
+  ``deterministic=false``: GET is safe and idempotent (RFC 9110 §9.2),
+  and only a deterministic call lets Catalyst push a filter or a limit
+  on the outer table below it — an outer ``WHERE id < 10`` or
+  ``LIMIT 10`` over 1,000 rows sends 10 requests instead of 1,000. The
+  price is that a CTE referenced twice is inlined twice and sends its
+  GETs twice.
+- ``t_http_post`` stays a nondeterministic Python UDTF, one request at
+  a time on one keep-alive ``operators.http.HttpClient`` per task: a
+  SQL table function over a nondeterministic UDF fails analysis under
+  LATERAL (``NON_DETERMINISTIC_LATERAL_SUBQUERIES``), and a POST must
+  not be marked deterministic, so that it is sent exactly as often as
+  the query reads the CTE (once). ``jd_keys``, ``jd_mget`` and
+  ``zk_read`` are nondeterministic Python UDTFs too.
 - One UDTF class instance is created per task, so instance state
-  gives the reference's one-client-per-task amortization: the HTTP
-  functions hold one keep-alive ``operators.http.HttpClient``, created
-  in ``__init__`` and closed in ``cleanup`` (which PySpark runs in a
-  ``finally`` after ``terminate``, so also when evaluation fails); the
-  Redis/ZooKeeper clients open lazily on first ``eval``.
+  gives the reference's one-client-per-task amortization: the
+  ``t_http_post`` client is created in ``__init__``, the
+  Redis/ZooKeeper clients open lazily on first ``eval``, and every
+  client is closed in ``cleanup``, which PySpark runs in a ``finally``
+  after ``terminate``, so also when evaluation fails.
 - Connectivity is factory-injected at registration (the pydatasource
   idiom): HTTP needs none; Redis/ZooKeeper functions are registered
   only when a client factory is supplied (real clients are
   import-gated on redis/kazoo, absent in this sandbox — the
   file-backed/in-memory fakes in testing/ keep the executor-side
   plumbing real).
-- Python UDTFs are nondeterministic by DEFAULT in Spark 4.1 (the API
-  offers ``asDeterministic``, not the reverse). ``t_http_get`` alone is
-  marked deterministic, a departure from the reference's
-  ``deterministic=false``: GET is safe and idempotent (RFC 9110 §9.2),
-  and only a deterministic UDTF lets Catalyst push a filter on the
-  outer table below the LATERAL join — an outer ``WHERE id < 10`` over
-  1,000 rows sends 10 requests instead of 1,000. The price is that a
-  CTE referenced twice is inlined twice and sends its GETs twice.
-  ``t_http_post`` stays nondeterministic, so a POST is sent exactly as
-  often as the query reads the CTE (once), and so do ``jd_keys``,
-  ``jd_mget`` and ``zk_read``. Errors become data rows
-  ``(code=-1, content=<message>)``, never task failures
-  (reference: http/HttpHelper.java:53-59).
+- Errors become data rows ``(code=-1, content=<message>)``, never task
+  failures (reference: http/HttpHelper.java:53-59).
 """
 
-from __future__ import annotations
-
-import json
-from typing import Callable
+from collections.abc import Callable, Iterator
 
 from pyspark.sql import SparkSession
 from pyspark.sql.functions import udtf
@@ -62,41 +70,22 @@ from data_misc_tools_spark.operators.http import (
     DEFAULT_TIMEOUT_MS,
     HTTP_RESULT_TYPE,
     HttpClient,
+    request_batches,
+    request_headers_json,
 )
 
-
-def _parse_headers(headers_json: str | None) -> dict[str, str] | None:
-    if not headers_json:
-        return None
-    return {str(k): str(v) for k, v in json.loads(headers_json).items()}
-
-
-def make_http_get_udtf():
-    """UDTF class for ``t_http_get(url[, timeout_ms[, headers_json]])``
-    → one row ``(code, headers, content)`` per call; deterministic (see
-    the module docstring)."""
-
-    class THttpGet:
-        def __init__(self) -> None:
-            self._client = HttpClient()
-
-        def eval(
-            self,
-            url: str,
-            timeout_ms: int = DEFAULT_TIMEOUT_MS,
-            headers_json: str | None = None,
-        ):
-            try:
-                hdrs = _parse_headers(headers_json)
-            except Exception as e:  # bad headers JSON -> error-as-data
-                yield (-1, None, f"bad headers_json: {e}")
-                return
-            yield self._client.request("GET", url, timeout_ms or DEFAULT_TIMEOUT_MS, hdrs)
-
-        def cleanup(self) -> None:
-            self._client.close()
-
-    return udtf(THttpGet, returnType=HTTP_RESULT_TYPE).asDeterministic()
+# The GET UDF under t_http_get, and t_http_get itself: one row
+# (code, headers, content) per call.
+_GET_BATCH_UDF = "_t_http_get_batch"
+_T_HTTP_GET_DDL = f"""
+CREATE OR REPLACE TEMPORARY FUNCTION t_http_get(
+    url STRING,
+    timeout_ms INT DEFAULT {DEFAULT_TIMEOUT_MS},
+    headers_json STRING DEFAULT NULL)
+RETURNS TABLE (code INT, headers MAP<STRING,STRING>, content STRING)
+RETURN SELECT r.code, r.headers, r.content
+FROM (SELECT {_GET_BATCH_UDF}(url, timeout_ms, headers_json) AS r)
+"""
 
 
 def make_http_post_udtf():
@@ -114,13 +103,8 @@ def make_http_post_udtf():
             timeout_ms: int = DEFAULT_TIMEOUT_MS,
             headers_json: str | None = None,
         ):
-            try:
-                hdrs = _parse_headers(headers_json)
-            except Exception as e:
-                yield (-1, None, f"bad headers_json: {e}")
-                return
-            yield self._client.request(
-                "POST", url, timeout_ms or DEFAULT_TIMEOUT_MS, hdrs, body
+            yield request_headers_json(
+                self._client, "POST", url, timeout_ms or DEFAULT_TIMEOUT_MS, headers_json, body
             )
 
         def cleanup(self) -> None:
@@ -146,12 +130,9 @@ def make_jd_keys_udtf(client_factory: Callable[[], object]):
             for k in self._client.scan_iter(match=pattern):
                 yield (k,)
 
-        def terminate(self):
+        def cleanup(self) -> None:
             if self._client is not None:
-                try:
-                    self._client.close()
-                except Exception:
-                    pass
+                self._client.close()
 
     return udtf(JdKeys, returnType="k string")
 
@@ -174,12 +155,9 @@ def make_jd_mget_udtf(client_factory: Callable[[], object]):
             for k, v in zip(ks, vals):
                 yield (k, v)
 
-        def terminate(self):
+        def cleanup(self) -> None:
             if self._client is not None:
-                try:
-                    self._client.close()
-                except Exception:
-                    pass
+                self._client.close()
 
     return udtf(JdMget, returnType="k string, v string")
 
@@ -206,13 +184,27 @@ def make_zk_read_udtf(client_factory: Callable[[], object]):
             for p, v in read_tree(self._client, *paths):
                 yield (p, v)
 
+        def cleanup(self) -> None:
+            if self._client is not None:
+                self._client.close()
+
     return udtf(ZkRead, returnType="p string, v string")
 
 
 def register_http_table_functions(spark: SparkSession) -> None:
-    """Register ``t_http_get`` / ``t_http_post`` as SQL table
+    """Register ``t_http_get`` (a SQL function over a deterministic GET
+    pandas UDF) and ``t_http_post`` (a Python UDTF) as SQL table
     functions (no connectivity needed until first call)."""
-    spark.udtf.register("t_http_get", make_http_get_udtf())
+    # Local import: the type hints below are evaluated here, and pandas
+    # is loaded only by sessions that register the functions.
+    import pandas as pd
+    from pyspark.sql.functions import pandas_udf
+
+    def get_batch(batches: Iterator[tuple[pd.Series, ...]]) -> Iterator[pd.DataFrame]:
+        return request_batches("GET", batches, headers_json=True)
+
+    spark.udf.register(_GET_BATCH_UDF, pandas_udf(get_batch, HTTP_RESULT_TYPE))
+    spark.sql(_T_HTTP_GET_DDL)
     spark.udtf.register("t_http_post", make_http_post_udtf())
 
 

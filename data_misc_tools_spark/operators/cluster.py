@@ -606,7 +606,10 @@ def pagerank_fast(
                 (F.col("rank") / F.col("__deg")).alias("__s"),
             )
             .groupBy("b")
-            .agg(F.sum("__s").alias("__in"))
+            # An exact DECIMAL sum: a DOUBLE sum depends on the order in
+            # which the shuffle delivers the shares, which differs from
+            # run to run and with the checkpoint cadence.
+            .agg(F.sum(F.col("__s").cast("decimal(38,18)")).cast("double").alias("__in"))
             .select(
                 F.col("b").alias("node"),
                 (F.lit(base) + F.lit(damping) * F.col("__in")).alias("rank"),

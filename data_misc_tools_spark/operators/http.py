@@ -9,17 +9,21 @@ row an anti-pattern (README.md:96-105).
 
 Every HTTP request of the engine goes through :class:`HttpClient`: one
 persistent HTTP/1.1 connection per thread and per (scheme, host, port),
-opened on first use and closed by ``close`` at task end. Its three
-users each hold one client per task:
+opened on first use and closed by ``close`` at task end. Its users
+each hold one client per task:
 
 - the batch operators below run via ``mapInPandas`` — one Arrow batch
   iterator per partition, with one client and one thread pool opened
   before the first batch and closed in a ``finally``; "ctx"
   passthrough is free: all input columns are carried through to the
   output schema unchanged, with the response struct appended;
-- the SQL ``t_http_get``/``t_http_post`` UDTFs (functions.tablefuncs);
 - the SQL ``http_get``/``http_post`` scalar pandas UDFs
-  (functions.registry), through :func:`request_batches`.
+  (functions.registry) and the SQL table function ``t_http_get``
+  (functions.tablefuncs, a SQL function over a deterministic pandas
+  UDF), all through :func:`request_batches`, which holds a thread pool
+  as well;
+- the SQL ``t_http_post`` Python UDTF (functions.tablefuncs), one
+  request at a time.
 
 Error channel parity: failures become data rows ``(code=-1, headers
 NULL, content=<error message>)``, never task failures (reference:
@@ -42,6 +46,7 @@ hanging executors.
 from __future__ import annotations
 
 import http.client
+import json
 import select
 import ssl
 import threading
@@ -60,7 +65,8 @@ from pyspark.sql.types import (
 )
 
 # The one (code, headers, content) result type of every HTTP path: the
-# operators here, the t_http_* UDTFs and the http_get/http_post UDFs.
+# operators here, the t_http_* table functions and the http_get/http_post
+# UDFs.
 HTTP_RESULT_TYPE = StructType([
     StructField("code", IntegerType()),
     StructField("headers", MapType(StringType(), StringType())),
@@ -193,19 +199,45 @@ def http_call_once(
         return client.request(method, url, timeout_ms, headers, body)
 
 
-def _request_all(client, pool, method, urls, timeouts, headers, bodies) -> list[Result]:
-    return list(pool.map(lambda a: client.request(method, *a), zip(urls, timeouts, headers, bodies)))
+def request_headers_json(
+    client: HttpClient,
+    method: str,
+    url: str | None,
+    timeout_ms: int = DEFAULT_TIMEOUT_MS,
+    headers_json: str | None = None,
+    body: str | None = None,
+) -> Result:
+    """``client.request`` with the headers given as a JSON object string
+    (NULL or empty: none); any other string is a ``(-1, None, "bad
+    headers_json: ...")`` row and sends nothing."""
+    headers = None
+    if headers_json:
+        try:
+            headers = {str(k): str(v) for k, v in json.loads(headers_json).items()}
+        except (ValueError, AttributeError) as e:  # not JSON / not an object
+            return (-1, None, f"bad headers_json: {e}")
+    return client.request(method, url, timeout_ms, headers, body)
 
 
-def request_batches(method: str, batches: Iterator) -> Iterator:
+def _request_all(
+    client, pool, method, urls, timeouts, headers, bodies, send=HttpClient.request
+) -> list[Result]:
+    return list(pool.map(lambda a: send(client, method, *a), zip(urls, timeouts, headers, bodies)))
+
+
+def request_batches(method: str, batches: Iterator, headers_json: bool = False) -> Iterator:
     """Body of the scalar-iterator pandas UDFs ``http_get(url[, timeout[,
-    headers]])`` and ``http_post(url[, timeout[, headers[, content]]])``:
-    each batch of argument Series becomes a DataFrame of
-    ``HTTP_RESULT_TYPE`` rows, on one client and one thread pool per
-    task. A NULL (or 0) timeout means ``DEFAULT_TIMEOUT_MS``."""
+    headers]])`` and ``http_post(url[, timeout[, headers[, content]]])``,
+    and of the GET UDF under SQL ``t_http_get`` (``headers_json``: the
+    headers argument is a JSON object string, see
+    :func:`request_headers_json`): each batch of argument Series becomes
+    a DataFrame of ``HTTP_RESULT_TYPE`` rows, on one client and one
+    thread pool per task. A NULL (or 0) timeout means
+    ``DEFAULT_TIMEOUT_MS``."""
     import pandas as pd
 
     max_args = 4 if method == "POST" else 3
+    send = request_headers_json if headers_json else HttpClient.request
     with HttpClient() as client, ThreadPoolExecutor(DEFAULT_CONCURRENCY) as pool:
         for cols in batches:
             cols = (cols,) if isinstance(cols, pd.Series) else tuple(cols)
@@ -215,7 +247,7 @@ def request_batches(method: str, batches: Iterator) -> Iterator:
             urls, timeouts, headers, bodies = [c.tolist() for c in cols] + [[None] * n] * (4 - len(cols))
             # NaN (a NULL in a nullable integer column) != NaN
             timeouts = [int(t) if t and t == t else DEFAULT_TIMEOUT_MS for t in timeouts]
-            results = _request_all(client, pool, method, urls, timeouts, headers, bodies)
+            results = _request_all(client, pool, method, urls, timeouts, headers, bodies, send)
             yield pd.DataFrame(results, columns=[f.name for f in HTTP_RESULT_TYPE.fields])
 
 

@@ -38,6 +38,8 @@ class ZKClient(Protocol):
 
     def exists(self, path: str) -> bool: ...
 
+    def close(self) -> None: ...
+
 
 def merge_paths(paths: list[str]) -> list[str]:
     """Drop paths covered by an ancestor also present in the list
@@ -168,5 +170,9 @@ def kazoo_client(hosts: str, timeout_ms: int = 3000) -> ZKClient:
 
         def exists(self, path: str) -> bool:
             return self._c.exists(path) is not None
+
+        def close(self) -> None:
+            self._c.stop()
+            self._c.close()
 
     return _Kazoo()  # pragma: no cover

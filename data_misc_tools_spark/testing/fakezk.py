@@ -49,3 +49,6 @@ class FakeZK:
 
     def exists(self, path: str) -> bool:
         return path == "/" or path in self.nodes  # ZK root always exists
+
+    def close(self) -> None:
+        pass  # in memory: nothing to release

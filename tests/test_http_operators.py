@@ -14,6 +14,7 @@ import pyspark.sql.functions as F
 import pytest
 
 from data_misc_tools_spark.operators.http import (
+    DEFAULT_CONCURRENCY,
     HttpClient,
     http_call_once,
     t_http_get,
@@ -92,15 +93,17 @@ def test_one_partition_reuses_at_most_concurrency_connections(spark):
     assert 1 <= stats["connections"] <= 4
 
 
-def test_udtf_opens_one_connection_per_partition(spark):
+def test_sql_t_http_get_one_partition_reuses_at_most_concurrency_connections(spark):
     port = ensure_echo_server()
-    _base(spark, port, 40).repartition(4).createOrReplaceTempView("ka_urls")
+    _base(spark, port, 40).coalesce(1).createOrReplaceTempView("ka_urls")
     httpserver.reset()
     rows = spark.sql(
-        "SELECT h.code FROM ka_urls t, LATERAL t_http_get(t.url) h"
+        "SELECT t.id, h.code, h.content FROM ka_urls t, LATERAL t_http_get(t.url) h"
     ).collect()
-    assert [r.code for r in rows] == [200] * 40
-    assert httpserver.stats() == {"requests": 40, "connections": 4}
+    assert sorted((r.id, r.code, r.content) for r in rows) == [(i, 200, f"id-{i}") for i in range(40)]
+    stats = httpserver.stats()
+    assert stats["requests"] == 40
+    assert 1 <= stats["connections"] <= DEFAULT_CONCURRENCY
 
 
 def test_connection_close_response_is_handled(spark):

@@ -1327,11 +1327,13 @@ def test_r10_new_ops_plan_shapes(spark, sf_dir):
     for m in _PY_MARKERS:
         assert m not in p
 
-    # SQL table functions: the lateral t_http_get IS a Python UDTF —
-    # pin that it appears as one (the declared Python surface) and
-    # that the doc filter still prunes before the fan-out
+    # SQL table functions: the lateral t_http_get is a SQL function over
+    # a batched GET pandas UDF — pin that it plans as one Arrow
+    # evaluation, not a row-at-a-time Python UDTF, and that the doc
+    # filter still prunes before the fan-out
     p = _plan(spark, "t_http_get_sql_demo", sf_dir)
-    assert "PythonUDTF" in p or "BatchEvalPythonUDTF" in p
+    assert "ArrowEvalPython" in p
+    assert "PythonUDTF" not in p  # neither BatchEvalPythonUDTF nor any other
     assert "PushedFilters: [IsNotNull(doc_id), LessThan(doc_id,24)" in p
 
     # blocking eval: candidate/truth joins are pair-keyed equi-joins
