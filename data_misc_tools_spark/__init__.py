@@ -18,9 +18,13 @@ Layout:
   plans/       SQL script splitting/execution
   streaming/   Structured Streaming wrappers (Kafka, windowed aggs)
   runner       scheduled hot-reload script runner + execution records
+  zipimports   Python workers skip re-reading unchanged zips per task
 """
 
 from data_misc_tools_spark.session import build_session, register_all
+from data_misc_tools_spark.zipimports import share_zip_directories
+
+share_zip_directories()
 
 __version__ = "0.1.0"
 

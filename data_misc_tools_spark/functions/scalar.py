@@ -93,13 +93,18 @@ def cfgs(spark, pattern: str | None = None) -> dict[str, str]:
     (reference: hive-udfs/.../commons/UDFCfgs.java:24-58); here it is a
     real driver-side helper over ``spark.conf``.
     """
+    import logging
     import re
+
+    from pyspark.errors import PySparkException
 
     all_cfg = dict(spark.sparkContext.getConf().getAll())
     try:  # runtime SQL confs too — plain collect, no Python-RDD job
         all_cfg.update({r[0]: r[1] for r in spark.sql("SET -v").collect()})
-    except Exception:
-        pass
+    except PySparkException:
+        logging.getLogger(__name__).warning(
+            "SET -v failed: runtime SQL confs left out", exc_info=True
+        )
     if pattern:
         rx = re.compile(pattern)
         return {k: v for k, v in all_cfg.items() if rx.search(k)}

@@ -40,7 +40,13 @@ At 100 TB scale: HTTP calls are the bottleneck, not Spark — the
 operator exposes ``concurrency`` (threads per partition) and callers
 control total parallelism with ``df.repartition(n)``. Each call runs
 with a timeout, so a dead endpoint degrades to error rows instead of
-hanging executors.
+hanging executors. Every path runs as a Python task, and each task
+pays a fixed start-up cost before its first request, so partitions
+should be large enough to amortise it. On CPython < 3.13 most of that
+cost was the worker re-reading the directory of every zip on its path
+(``pyspark.zip`` alone about 12 times) at each task start; importing
+this package stops that from a worker's second task on (see
+``data_misc_tools_spark.zipimports``).
 """
 
 from __future__ import annotations

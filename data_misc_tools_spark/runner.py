@@ -25,6 +25,7 @@ from __future__ import annotations
 
 import importlib.util
 import json
+import logging
 import os
 import re
 import time
@@ -112,7 +113,11 @@ class ScriptTask:
                 try:
                     close()
                 except Exception:
-                    pass
+                    # the old instance is dropped either way; the new one
+                    # must still load and run
+                    logging.getLogger(__name__).warning(
+                        "closing the replaced instance of %s failed", self.path, exc_info=True
+                    )
         if self.script_type == "sql":
             with open(self.path, encoding="utf-8") as f:
                 script = f.read()

@@ -39,13 +39,9 @@ def build_session(
     builder = SparkSession.builder.appName(app_name)
     if hive:
         # Hive-metastore-backed catalog (the reference runs against
-        # HiveServer2). Requires Hive classes on the classpath; on a
-        # plain PySpark install the built-in catalog serves the same
-        # SQL surface, so failure here is not fatal.
-        try:
-            builder = builder.enableHiveSupport()
-        except Exception:
-            pass
+        # HiveServer2). This only sets a conf; the Hive classes are
+        # needed when the session is created.
+        builder = builder.enableHiveSupport()
 
     if master is None and "SPARK_MASTER" not in os.environ:
         cpus = os.environ.get("SPARK_GRAFT_CPUS", "*")
@@ -159,23 +155,45 @@ def ship_package(spark: SparkSession) -> None:
     cache = session_cache(spark, "shipped")
     if cache.get("done"):
         return
+    spark.sparkContext.addPyFile(package_zip())
+    cache["done"] = True
+
+
+def package_zip() -> str:
+    """Path of a zip of this package's sources, named by their hash.
+
+    A zip left in the temp dir by another process or another version of
+    the code has another name, so it is never shipped in place of the
+    current sources; a zip with this name holds exactly these sources.
+    It is written under a unique name and renamed into place, so a
+    concurrent or interrupted writer never leaves a partial zip there.
+    """
+    import hashlib
     import tempfile
     import zipfile
 
     pkg_dir = os.path.dirname(os.path.abspath(__file__))
+    sources = {}  # archive name -> bytes
+    digest = hashlib.sha256()
+    for root, dirs, files in os.walk(pkg_dir):
+        dirs.sort()
+        for fn in sorted(files):
+            if fn.endswith(".py"):
+                full = os.path.join(root, fn)
+                name = os.path.relpath(full, os.path.dirname(pkg_dir))
+                with open(full, "rb") as f:
+                    sources[name] = f.read()
+                digest.update(f"{name}\0{len(sources[name])}\0".encode() + sources[name])
     zpath = os.path.join(
-        tempfile.gettempdir(), f"data_misc_tools_spark_{os.getpid()}.zip"
+        tempfile.gettempdir(), f"data_misc_tools_spark_{digest.hexdigest()[:16]}.zip"
     )
     if not os.path.exists(zpath):
-        with zipfile.ZipFile(zpath, "w") as z:
-            for root, _dirs, files in os.walk(pkg_dir):
-                for fn in files:
-                    if fn.endswith(".py"):
-                        full = os.path.join(root, fn)
-                        rel = os.path.relpath(full, os.path.dirname(pkg_dir))
-                        z.write(full, rel)
-    spark.sparkContext.addPyFile(zpath)
-    cache["done"] = True
+        tmp = f"{zpath}.{os.getpid()}.tmp"
+        with zipfile.ZipFile(tmp, "w") as z:
+            for name, data in sources.items():
+                z.writestr(name, data)
+        os.replace(tmp, zpath)
+    return zpath
 
 
 def register_all(spark: SparkSession) -> SparkSession:

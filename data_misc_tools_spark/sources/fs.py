@@ -9,6 +9,7 @@ cluster's Hadoop conf knows.
 
 from __future__ import annotations
 
+from py4j.protocol import Py4JError
 from pyspark.sql import SparkSession
 
 
@@ -58,10 +59,10 @@ def append_text(spark: SparkSession, path: str, content: str) -> None:
     """
     fs, jpath, _ = _fs(spark, path)
     try:
-        # ChecksumFileSystem (file://) -> unwrap; others raise and
-        # keep the native filesystem
+        # ChecksumFileSystem (file://) -> unwrap; others have no such
+        # method and keep the native filesystem
         fs = fs.getRawFileSystem()
-    except Exception:
+    except Py4JError:
         pass
     if fs.exists(jpath):
         stream = fs.append(jpath)

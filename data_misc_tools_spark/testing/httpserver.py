@@ -74,12 +74,18 @@ class _EchoHandler(BaseHTTPRequestHandler):
         pass
 
 
+class _EchoServer(ThreadingHTTPServer):
+    # socketserver's listen backlog of 5 can reset connections when 4
+    # tasks x 8 threads connect at once; the perfbench stub uses 4096 too.
+    request_queue_size = 4096
+
+
 def ensure_echo_server() -> int:
     """Start (once) the echo server on an ephemeral port; returns the port."""
     global _server
     with _lock:
         if _server is None:
-            _server = ThreadingHTTPServer(("127.0.0.1", 0), _EchoHandler)
+            _server = _EchoServer(("127.0.0.1", 0), _EchoHandler)
             t = threading.Thread(target=_server.serve_forever, daemon=True)
             t.start()
         return _server.server_address[1]

@@ -117,6 +117,23 @@ def test_connection_close_response_is_handled(spark):
     assert httpserver.stats() == {"requests": 20, "connections": 20}
 
 
+def test_echo_server_accepts_a_burst_of_connections(spark):
+    """4 tasks x 8 threads open 32 connections at once; none is reset
+    (a POST is never re-sent, so a reset would show as a -1 row)."""
+    port = ensure_echo_server()
+    df = spark.range(0, 400, 1, 4).select(
+        "id",
+        F.concat(F.lit(f"http://127.0.0.1:{port}/p-"), F.col("id")).alias("url"),
+        F.col("id").cast("string").alias("body"),
+    )
+    out = t_http_post(df, "url", "body", concurrency=8).collect()
+    assert len(out) == 400
+    assert [r.http_result.content for r in sorted(out, key=lambda r: r.id)] == [
+        f"p-{i}|{i}" for i in range(400)
+    ]
+    assert all(r.http_result.code == 200 for r in out)
+
+
 def test_client_shared_by_many_threads_tracks_every_connection():
     base = f"http://127.0.0.1:{ensure_echo_server()}"
     interval = sys.getswitchinterval()
