@@ -106,7 +106,11 @@ def test_session_fn_emits_on_timeout():
 def test_sessionize_stream_runs_end_to_end(spark, sf_dir):
     """The streaming query starts, processes real input through the
     state machine, and stops cleanly (timeout emissions need wall-clock
-    inactivity, so rows may be zero in a single availableNow pass)."""
+    inactivity, so rows may be zero in a single availableNow pass).
+
+    A processing-time timeout asks for another no-data batch after every
+    batch, so with no-data batches on an availableNow query never ends;
+    they are off while the query starts, and it must end by itself."""
     src = f"{sf_dir}/events.parquet"
     stage = tempfile.mkdtemp(prefix="sess_stage_")
     os.symlink(src, os.path.join(stage, "events.parquet"))
@@ -123,20 +127,28 @@ def test_sessionize_stream_runs_end_to_end(spark, sf_dir):
     stream = stream.select("user_id", "ts")
     out = sessionize_stream(stream)
     assert out.schema == SESSION_OUT_SCHEMA
-    q = (
-        out.writeStream.format("memory")
-        .queryName("sess_test")
-        .outputMode("append")
-        .option("checkpointLocation", tempfile.mkdtemp(prefix="sess_ckpt_"))
-        .trigger(availableNow=True)
-        .start()
-    )
+    no_data = "spark.sql.streaming.noDataMicroBatches.enabled"
+    prev = spark.conf.get(no_data)
+    spark.conf.set(no_data, "false")
     try:
-        q.awaitTermination(120)
+        q = (
+            out.writeStream.format("memory")
+            .queryName("sess_test")
+            .outputMode("append")
+            .option("checkpointLocation", tempfile.mkdtemp(prefix="sess_ckpt_"))
+            .trigger(availableNow=True)
+            .start()
+        )
+    finally:
+        spark.conf.set(no_data, prev)
+    try:
+        ended = q.awaitTermination(120)
     finally:
         if q.isActive:
             q.stop()
+    assert ended, "availableNow sessionize query did not end by itself"
     assert q.exception() is None
+    assert sum(p["numInputRows"] for p in q.recentProgress) > 0
     assert spark.table("sess_test").count() >= 0
 
 

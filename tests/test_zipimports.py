@@ -100,14 +100,20 @@ def test_reused_worker_task_start_reads_no_zip_directory(spark):
     """A task on a reused Python worker starts without reading any zip
     directory. The UDF counts zipimport._read_directory calls in its
     worker since the previous UDF call there; jobs repeat until a worker
-    is reused, since the pool may hold several idle workers."""
+    is reused, since the pool may hold several idle workers. The test
+    session's daemon installs its own copy of the method before any task
+    (tests/workers/zipshare_daemon.py), so the UDF also checks that the
+    package's import put the package's method in its place."""
 
     def probe(_):
         import os
         import zipimport
 
-        import data_misc_tools_spark  # noqa: F401  the engine's worker-side import
+        import data_misc_tools_spark  # the engine's worker-side import
 
+        own = data_misc_tools_spark.zipimports._invalidate_caches
+        if zipimport.zipimporter.invalidate_caches is not own:
+            return f"{os.getpid()} unpatched"
         if not hasattr(zipimport, "_probe_reads"):
             zipimport._probe_reads = []
             read = zipimport._read_directory
