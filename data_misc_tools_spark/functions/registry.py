@@ -147,7 +147,11 @@ def register_functions(spark: SparkSession) -> None:
 def _register_http(spark: SparkSession) -> None:
     """Register ``http_get(url[, timeout[, headers]])`` and
     ``http_post(url[, timeout[, headers[, content]]])``, both returning
-    ``HTTP_RESULT_TYPE``."""
+    ``HTTP_RESULT_TYPE``. Nondeterministic, so Catalyst neither folds
+    nor duplicates them within a plan; a global ``ORDER BY`` above them
+    or a second action still evaluates them again, so ``CACHE TABLE``
+    an ``http_post`` result before sorting or re-reading it
+    (operators/http.py module docstring, "Side effects")."""
     # Local import: the type hints below are evaluated here, and pandas
     # is loaded only by sessions that register the functions.
     import pandas as pd

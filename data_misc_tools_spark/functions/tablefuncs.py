@@ -90,7 +90,11 @@ FROM (SELECT {_GET_BATCH_UDF}(url, timeout_ms, headers_json) AS r)
 
 def make_http_post_udtf():
     """UDTF class for ``t_http_post(url, body[, timeout_ms[,
-    headers_json]])`` → one row ``(code, headers, content)``."""
+    headers_json]])`` → one row ``(code, headers, content)``.
+
+    A global ``ORDER BY`` over the call, or a second read of its
+    result, sends every request again: ``CACHE TABLE`` the result
+    first (operators/http.py module docstring, "Side effects")."""
 
     class THttpPost:
         def __init__(self) -> None:

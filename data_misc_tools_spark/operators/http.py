@@ -36,6 +36,22 @@ A POST is never sent twice. GET follows up to 10 redirects; a POST
 returns the 3xx as its row. Proxy environment variables are ignored:
 every request connects to the URL's host directly.
 
+Side effects: a request is sent each time Spark evaluates the row that
+carries it, and a query can evaluate a row more than once. A global
+``ORDER BY`` (or ``orderBy``) above the calls runs a sampling job over
+the plan below it before the sort, which sends every request a second
+time; so does a second action on the same unmaterialised result
+(``r.count(); r.collect()``). For a POST, or any call that must be sent
+once per row, materialise the calls first and sort or re-read the
+materialised rows: ``CACHE TABLE posted AS SELECT ...`` in SQL,
+``localCheckpoint()`` (eager) on a DataFrame. A window over the result
+takes no sample. (200 rows, counted at the loopback server: ``LATERAL
+t_http_post`` under ``ORDER BY`` sent 400 requests, and 200 when sorted
+after ``CACHE TABLE``.) Task retries and speculative tasks still
+re-send the requests of the task they repeat: delivery is
+at-least-once, by Spark's design, and so is a cached partition lost
+with its executor, which is computed again.
+
 At 100 TB scale: HTTP calls are the bottleneck, not Spark — the
 operator exposes ``concurrency`` (threads per partition) and callers
 control total parallelism with ``df.repartition(n)``. Each call runs
@@ -323,7 +339,11 @@ def t_http_post(
     concurrency: int = DEFAULT_CONCURRENCY,
     result_col: str = "http_result",
 ) -> DataFrame:
-    """Batch HTTP POST; body taken per-row from ``body_col``."""
+    """Batch HTTP POST; body taken per-row from ``body_col``.
+
+    Each evaluation of the result sends the requests again: call
+    ``localCheckpoint()`` on it before a global sort or a second
+    action (see the module docstring, "Side effects")."""
     return _batch_http(
         df,
         "POST",

@@ -75,20 +75,42 @@ def append_text(spark: SparkSession, path: str, content: str) -> None:
         stream.close()
 
 
+def _entry(st) -> dict:
+    return {
+        "path": st.getPath().toString(),
+        "is_dir": st.isDirectory(),
+        "size": st.getLen(),
+        "mtime_ms": st.getModificationTime(),
+    }
+
+
 def ls(spark: SparkSession, path: str) -> list[dict]:
     """Directory listing with size/mtime (reference: HdfsHelper.scala:67-77)."""
     fs, jpath, _ = _fs(spark, path)
-    out = []
-    for st in fs.listStatus(jpath):
-        out.append(
-            {
-                "path": st.getPath().toString(),
-                "is_dir": st.isDirectory(),
-                "size": st.getLen(),
-                "mtime_ms": st.getModificationTime(),
-            }
-        )
-    return sorted(out, key=lambda d: d["path"])
+    return sorted(map(_entry, fs.listStatus(jpath)), key=lambda d: d["path"])
+
+
+def stat(spark: SparkSession, path: str) -> dict:
+    """One ``ls`` entry for ``path`` itself (raises when absent)."""
+    fs, jpath, _ = _fs(spark, path)
+    return _entry(fs.getFileStatus(jpath))
+
+
+def glob(spark: SparkSession, pattern: str) -> list[dict]:
+    """``ls`` entries of every path matching a Hadoop glob (``*``, ``?``,
+    ``[...]``, ``{a,b}``), in one ``globStatus`` call; [] when nothing
+    matches. Literal parts taken from elsewhere go through
+    :func:`escape_glob` first."""
+    fs, jpath, _ = _fs(spark, pattern)
+    matches = fs.globStatus(jpath)
+    return sorted(map(_entry, matches or []), key=lambda d: d["path"])
+
+
+def escape_glob(path: str) -> str:
+    """``path`` with every Hadoop glob metacharacter backslash-escaped,
+    so it matches only itself as a glob (and as a Spark read path, which
+    Spark globs too)."""
+    return "".join("\\" + c if c in "\\*?[]{}" else c for c in path)
 
 
 def exists(spark: SparkSession, path: str) -> bool:

@@ -36,3 +36,14 @@ def test_append_creates_then_appends(spark, tmp_path):
     assert fs.cat(spark, p) == "first\nsecond\n"
     fs.append_text(spark, p, "third\n")
     assert fs.cat(spark, p) == "first\nsecond\nthird\n"
+
+
+def test_glob_matches_an_escaped_literal_path(spark, tmp_path):
+    base = f"file://{tmp_path}/a[1]{{b,c}}*?"
+    fs.write_text(spark, f"{base}/v=1/_SUCCESS", "")
+    fs.write_text(spark, f"{base}/v=2/part", "x")
+    assert fs.escape_glob("a[1]{b,c}*?\\") == "a\\[1\\]\\{b,c\\}\\*\\?\\\\"
+    hits = fs.glob(spark, fs.escape_glob(base) + "/v=*/_SUCCESS")
+    assert [h["path"].rsplit("/", 2)[-2] for h in hits] == ["v=1"]
+    assert hits[0]["mtime_ms"] == fs.stat(spark, f"{base}/v=1/_SUCCESS")["mtime_ms"]
+    assert fs.glob(spark, f"file://{tmp_path}/absent/v=*") == []

@@ -3,7 +3,6 @@
 import json
 import os
 import time
-import uuid
 
 import pytest
 
@@ -13,6 +12,7 @@ from data_misc_tools_spark.runner import (
     ScriptTask,
     parse_iso_duration,
 )
+from data_misc_tools_spark.testing.jobs import jobs_started
 
 
 def test_parse_iso_duration():
@@ -273,17 +273,6 @@ def test_records_on_a_file_system_that_cannot_append(spark, tmp_path, monkeypatc
     assert r3.records().filter(f"path = '{crash}'").count() == 2
 
 
-def _jobs_started(spark, fn) -> int:
-    sc = spark.sparkContext
-    group = f"runner-bookkeeping-{uuid.uuid4().hex}"
-    sc.setJobGroup(group, group)
-    try:
-        fn()
-    finally:
-        sc.setLocalProperty("spark.jobGroup.id", None)
-    return len(sc.statusTracker().getJobIdsForGroup(group))
-
-
 def test_bookkeeping_starts_no_spark_job(spark, tmp_path):
     """Records and source snapshots are driver-side rows: neither a
     run_once of a pure-Python task nor a Runner() over filled records
@@ -295,10 +284,10 @@ def test_bookkeeping_starts_no_spark_job(spark, tmp_path):
     records = str(tmp_path / "records")
     runner = Runner(spark, records)
     t = ScriptTask(str(script), interval="PT0S")
-    assert _jobs_started(spark, lambda: runner.run_once(t)) == 0
+    assert jobs_started(spark, lambda: runner.run_once(t)) == 0
     for _ in range(3):
-        assert _jobs_started(spark, lambda: runner.run_once(t)) == 0
+        assert jobs_started(spark, lambda: runner.run_once(t)) == 0
     with pytest.raises(KeyboardInterrupt):
         runner.run_once(ScriptTask(str(crash)))
-    assert _jobs_started(spark, lambda: Runner(spark, records)) == 0
+    assert jobs_started(spark, lambda: Runner(spark, records)) == 0
     assert runner.last_result[str(script)] == 4

@@ -9,6 +9,7 @@ import pandas as pd
 import pyspark.sql.functions as F
 
 from data_misc_tools_spark.streaming.batch_replay import replay_parquet_aggregate
+from data_misc_tools_spark.testing.jobs import jobs_started
 from data_misc_tools_spark.streaming.stateful import (
     SESSION_OUT_SCHEMA,
     _session_fn,
@@ -898,6 +899,118 @@ class TestUpsertSink:
         self._run(spark, stage, tmp_path, "torn")
         live = {r.k for r in read_latest(spark, str(snap), op_col="op").collect()}
         assert live == {1, 3}
+
+
+class TestUpsertSnapshotMemo:
+    """The session remembers each snapshot version it wrote or read
+    (streaming/upsert.py): no schema-inference job per tick."""
+
+    SCHEMA = "k long, seq long, val string, op string"
+
+    def _batch(self, spark, rows):
+        return spark.createDataFrame(rows, self.SCHEMA)
+
+    def test_read_after_write_starts_no_job(self, spark, tmp_path):
+        from data_misc_tools_spark.streaming.upsert import ParquetUpsertSink, read_latest
+
+        store = str(tmp_path / "snap")
+        sink = ParquetUpsertSink(store, ["k"], ["seq"])
+        sink.process_batch(self._batch(spark, [(1, 1, "a", "u"), (2, 1, "b", "d")]), 0)
+        assert jobs_started(spark, lambda: read_latest(spark, store)) == 0
+        assert jobs_started(spark, lambda: read_latest(spark, store, op_col="op")) == 0
+        assert [r.k for r in read_latest(spark, store, op_col="op").collect()] == [1]
+
+    def test_second_batch_starts_only_its_write_jobs(self, spark, tmp_path):
+        from data_misc_tools_spark.streaming.upsert import (
+            ParquetUpsertSink,
+            keep_latest,
+            read_latest,
+        )
+
+        store = str(tmp_path / "snap")
+        sink = ParquetUpsertSink(store, ["k"], ["seq"])
+        first = self._batch(spark, [(1, 1, "a", "u"), (2, 1, "b", "u")])
+        second = self._batch(spark, [(1, 2, "a2", "u"), (3, 1, "c", "u")])
+        sink.process_batch(first, 0)
+        v1 = read_latest(spark, store)
+        n_batch = jobs_started(spark, lambda: sink.process_batch(second, 1))
+        # The same merge, written on its own: the jobs a tick cannot avoid.
+        merged = keep_latest(second.unionByName(v1), ["k"], ["seq"])
+        n_write = jobs_started(
+            spark, lambda: merged.write.parquet(str(tmp_path / "alone"))
+        )
+        assert n_batch == n_write
+        assert sorted(map(tuple, read_latest(spark, store).collect())) == [
+            (1, 2, "a2", "u"), (2, 1, "b", "u"), (3, 1, "c", "u"),
+        ]
+
+    def test_remembered_schema_equals_the_written_files(self, spark, tmp_path):
+        from data_misc_tools_spark.streaming.upsert import ParquetUpsertSink, read_latest
+
+        def batch(lo):
+            # spark.range keys are non-nullable, as are the literal array,
+            # map and struct parts: the files' schema makes them nullable
+            return (
+                spark.range(lo, lo + 3).withColumnRenamed("id", "k")
+                .withColumn("seq", F.col("k") * 10)
+                .withColumn("ts", F.timestamp_seconds(F.col("k") + 1_700_000_000))
+                .withColumn("d", F.to_date(F.lit("2024-02-29")))
+                .withColumn("dec", F.lit("1.000000000000000001").cast("decimal(38,18)"))
+                .withColumn("bin", F.lit("ab").cast("binary"))
+                .withColumn("arr", F.array(F.col("k"), F.lit(1)))
+                .withColumn("m", F.create_map(F.lit("x"), F.col("k")))
+                .withColumn("st", F.struct(F.lit(1).alias("a"), F.col("k").alias("b")))
+                .withColumn("nul", F.lit(None).cast("string"))
+            )
+
+        store = str(tmp_path / "snap")
+        sink = ParquetUpsertSink(store, ["k"], ["seq"])
+        sink.process_batch(batch(0), 0)
+        sink.process_batch(batch(2), 1)
+        remembered = read_latest(spark, store)
+        on_disk = spark.read.parquet(f"{store}/v=2")
+        assert remembered.schema == on_disk.schema
+        assert sorted(map(tuple, remembered.collect())) == sorted(
+            map(tuple, on_disk.collect())
+        )
+        assert [r.k for r in remembered.orderBy("k").collect()] == [0, 1, 2, 3, 4]
+
+    def test_store_rewritten_in_the_same_session_is_read_again(self, spark, tmp_path):
+        import shutil
+
+        from data_misc_tools_spark.streaming.upsert import ParquetUpsertSink, read_latest
+
+        store = str(tmp_path / "snap")
+        ParquetUpsertSink(store, ["k"], ["seq"]).process_batch(
+            self._batch(spark, [(1, 1, "a", "u")]), 0
+        )
+        assert [r.val for r in read_latest(spark, store).collect()] == ["a"]
+        shutil.rmtree(store)
+        # another writer commits v=1 again: same version, new marker
+        self._batch(spark, [(7, 1, "z", "u")]).write.parquet(f"{store}/v=1")
+        assert [tuple(r) for r in read_latest(spark, store).collect()] == [
+            (7, 1, "z", "u")
+        ]
+
+    def test_store_path_with_glob_characters(self, spark, tmp_path):
+        from data_misc_tools_spark.streaming.upsert import (
+            ParquetUpsertSink,
+            _current_version,
+            _versions,
+            read_latest,
+        )
+
+        store = str(tmp_path / "a[1]{b,c}*" / "snap")
+        ParquetUpsertSink(store, ["k"], ["seq"]).process_batch(
+            self._batch(spark, [(1, 1, "a", "u")]), 0
+        )
+        assert _versions(spark, store) == [1]
+        # a new sink (a restarted job) finds v=1 and commits v=2 on it
+        ParquetUpsertSink(store, ["k"], ["seq"]).process_batch(
+            self._batch(spark, [(2, 1, "b", "u")]), 1
+        )
+        assert _current_version(spark, store) == 2
+        assert sorted(r.k for r in read_latest(spark, store).collect()) == [1, 2]
 
 
 class TestSequenceStream:
