@@ -32,18 +32,18 @@ Design — versioned snapshot directories, not in-place overwrite:
 * One listing: the committed versions and their markers' mtimes come
   from one Hadoop ``globStatus`` of ``path/v=*/_SUCCESS``; a batch
   lists the store once, and prunes from that listing.
-* Committed versions are write-once, so the session remembers the
-  DataFrame of the version it last wrote or read per store path,
-  keyed by (version, ``_SUCCESS`` mtime). ``read_latest`` returns it
-  while both still match, and a batch merges with it: neither asks
-  Spark for the schema again, which ``spark.read.parquet`` does with a
-  one-task job that reads a footer (~0.1 s). A batch remembers what it
-  wrote as ``spark.read.schema(<its schema>).parquet(...)``. The mtime
-  makes a store deleted and rewritten under the same version number
-  read again. The memo lives on the Python ``SparkSession`` object
-  (``session.session_cache``); ``foreachBatch`` hands each micro-batch
-  a new one, so in a streaming query every batch misses and reads the
-  snapshot as before.
+* Committed versions are write-once, so the module remembers the
+  schema of the version last written or read per store path, keyed
+  by (version, ``_SUCCESS`` mtime), and reads that version as
+  ``spark.read.schema(<schema>).parquet(...)`` while both still match.
+  Without a schema ``spark.read.parquet`` asks Spark for it with a
+  one-task job that reads a footer (~0.1 s); with one it starts no
+  job. A batch remembers the schema it wrote. The mtime makes a store
+  deleted and rewritten under the same version number read again.
+  The memo is a module dict, not per ``SparkSession``: a schema holds
+  no session, and ``foreachBatch`` hands each micro-batch a new Python
+  session, so a streaming query's batches and the reader of its store
+  share one entry per store path.
 
 Replays are idempotent: re-processing batch B produces a snapshot
 with the same CONTENT (keep-latest is associative/commutative over
@@ -56,9 +56,13 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql.types import StructType
 
-from data_misc_tools_spark.session import session_cache
 from data_misc_tools_spark.sources import fs as _fsh
+
+# Store path -> (version, marker mtime ms, schema) of the snapshot last
+# written or read there (see the module docstring).
+_SCHEMAS: dict[str, tuple[int, int, StructType]] = {}
 
 
 def keep_latest(
@@ -106,24 +110,19 @@ def _current_version(spark: SparkSession, path: str) -> int | None:
     return max(_committed(spark, path), default=None)
 
 
-def _memo(spark: SparkSession) -> dict:
-    """Store path -> (version, marker mtime ms, DataFrame) of the
-    snapshot this session last wrote or read there."""
-    return session_cache(spark, "upsert_snapshots")
-
-
 def _snapshot(spark: SparkSession, path: str, committed: dict[int, int]) -> DataFrame | None:
     """The raw current snapshot of ``committed`` (a ``_committed``
-    listing of ``path``): the DataFrame this session last wrote or read
-    for that version, or a fresh read that is remembered."""
+    listing of ``path``), read with its remembered schema when this
+    process last wrote or read that version, else read and remembered."""
     if not committed:
         return None
     v = max(committed)
-    hit = _memo(spark).get(path)
+    src = f"{_fsh.escape_glob(path)}/v={v}"
+    hit = _SCHEMAS.get(path)
     if hit is not None and hit[:2] == (v, committed[v]):
-        return hit[2]
-    snap = spark.read.parquet(f"{_fsh.escape_glob(path)}/v={v}")
-    _memo(spark)[path] = (v, committed[v], snap)
+        return spark.read.schema(hit[2]).parquet(src)
+    snap = spark.read.parquet(src)
+    _SCHEMAS[path] = (v, committed[v], snap.schema)
     return snap
 
 
@@ -138,7 +137,7 @@ def read_latest(
     Pass ``op_col`` to hide tombstoned keys (rows whose winning change
     is a delete) — the live-state view; omit it for the raw snapshot
     including tombstones (what the merge path reads). Lists the store
-    once; starts no Spark job when this session already wrote or read
+    once; starts no Spark job when this process already wrote or read
     the current version (see the module docstring).
     """
     snap = _snapshot(spark, path, _committed(spark, path))
@@ -178,12 +177,11 @@ class ParquetUpsertSink:
         next_v = max(committed, default=0) + 1
         out = f"{self.path}/v={next_v}"
         latest.write.mode("overwrite").parquet(out)
-        # The writer knows the schema: reading it back with it given
-        # starts no footer-reading job.
-        _memo(spark)[self.path] = (
+        # The writer knows the schema: the next read starts no job.
+        _SCHEMAS[self.path] = (
             next_v,
             _fsh.stat(spark, f"{out}/_SUCCESS")["mtime_ms"],
-            spark.read.schema(latest.schema).parquet(_fsh.escape_glob(out)),
+            latest.schema,
         )
         self._prune(spark, [*committed, next_v])
 

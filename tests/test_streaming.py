@@ -902,8 +902,8 @@ class TestUpsertSink:
 
 
 class TestUpsertSnapshotMemo:
-    """The session remembers each snapshot version it wrote or read
-    (streaming/upsert.py): no schema-inference job per tick."""
+    """The schema of each snapshot version written or read is
+    remembered (streaming/upsert.py): no schema-inference job per tick."""
 
     SCHEMA = "k long, seq long, val string, op string"
 
@@ -974,6 +974,47 @@ class TestUpsertSnapshotMemo:
             map(tuple, on_disk.collect())
         )
         assert [r.k for r in remembered.orderBy("k").collect()] == [0, 1, 2, 3, 4]
+
+    def test_stream_batches_read_the_previous_snapshot_without_a_job(
+        self, spark, tmp_path
+    ):
+        """foreachBatch hands each micro-batch a new Python session: the
+        snapshot one batch wrote is still read without a footer job by
+        the next batch and, after the query, by the caller's session."""
+        from data_misc_tools_spark.streaming.upsert import ParquetUpsertSink, read_latest
+
+        stage = str(tmp_path / "stage")
+        for rows in ([(1, 1, "a", "u")], [(2, 1, "b", "u")], [(1, 2, "a2", "u")]):
+            self._batch(spark, rows).coalesce(1).write.mode("append").parquet(stage)
+        store = str(tmp_path / "snap")
+        sink = ParquetUpsertSink(store, ["k"], ["seq"])
+        reads, groups = [], []
+
+        def handler(batch, batch_id):
+            s = batch.sparkSession
+            if batch_id:
+                reads.append(jobs_started(s, lambda: read_latest(s, store)))
+            groups.append(s.sparkContext.getLocalProperty("spark.jobGroup.id"))
+            sink.process_batch(batch, batch_id)
+
+        q = (
+            spark.readStream.schema(self.SCHEMA)
+            .option("maxFilesPerTrigger", 1)
+            .parquet(stage)
+            .writeStream.foreachBatch(handler)
+            .option("checkpointLocation", str(tmp_path / "ckpt"))
+            .trigger(availableNow=True)
+            .start()
+        )
+        assert q.awaitTermination(120)
+        assert q.exception() is None
+        assert reads == [0, 0]
+        # counting put the query's own job group back
+        assert groups == [str(q.runId)] * 3
+        assert jobs_started(spark, lambda: read_latest(spark, store)) == 0
+        assert sorted(map(tuple, read_latest(spark, store).collect())) == [
+            (1, 2, "a2", "u"), (2, 1, "b", "u"),
+        ]
 
     def test_store_rewritten_in_the_same_session_is_read_again(self, spark, tmp_path):
         import shutil
