@@ -5686,14 +5686,17 @@ def changelog_compact_demo(spark: SparkSession, sf_dir: str) -> DataFrame:
     """CDC changelog compaction (operators/cdc.py compact_changelog):
     events as an upsert/delete log keyed by user — newest row wins
     per key ((ts, event_id) total order), keys whose winning op is a
-    delete ('error' here) drop out. One key-hash Exchange + in-
-    partition sort, no global sort. last_value is a per-row double
-    both engines hold identically — emitted unrounded (invariant)."""
+    delete ('error' here) drop out. One key-hash Exchange between a
+    partial and a final sort aggregate, no window, no global sort.
+    Only the columns the result needs enter the aggregate: the
+    packed-row struct is not pruned after it. last_value is a per-row
+    double both engines hold identically — emitted unrounded
+    (invariant)."""
     from data_misc_tools_spark.operators.cdc import compact_changelog
 
     ev = load_tables(spark, sf_dir, ["events"])["events"]
     out = compact_changelog(
-        ev,
+        ev.select("user_id", "ts", "event_id", "event_type", "value"),
         key_cols=["user_id"],
         seq_cols=["ts", "event_id"],
         op_col="event_type",

@@ -4,9 +4,11 @@ The reference ships one custom UDAF: an argmax (`max_with`) keeping
 the *data* value paired with the maximum *key*, implemented as a
 two-phase partial/merge aggregate (reference:
 hive-udfs/.../commons/UDAFCmpBase.java:28-224). Spark has this
-built in as ``max_by`` (partial+final HashAggregate, map-side combine
-for free), so our argmax is a thin argument-order adapter — no custom
-aggregation code, and Catalyst keeps it whole-stage-codegen'd.
+built in as ``max_by`` (a partial and a final aggregate, map-side
+combine for free: ``HashAggregate`` when data and key are fixed-width,
+``SortAggregate`` after a sort when either is a string, struct or
+other variable-width type), so our argmax is a thin argument-order
+adapter — no custom aggregation code.
 """
 
 from __future__ import annotations

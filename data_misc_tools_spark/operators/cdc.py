@@ -5,24 +5,28 @@ The reference refreshes derived tables by full re-ETL on a schedule
 At 100 TB a nightly full rebuild is the bottleneck, so the engine
 carries the primitives that make refreshes incremental:
 
+* :func:`keep_latest` — the one "newest row per key" of the package:
+  one ``max_by`` over structs, a partial and a final sort aggregate
+  around one key Exchange, no window, never a global sort. The
+  streaming upsert sink (streaming/upsert.py) folds its snapshots
+  with it too. On a real cluster the changelog and base table should
+  share bucketing on the key so the next merge is Exchange-free.
 * :func:`compact_changelog` — collapse an upsert/delete changelog to
-  latest-state-per-key. ONE shuffle (hash partition by key); the
-  per-key pick is a ``row_number`` over the sequence columns, i.e.
-  sort-within-partition, never a global sort. On a real cluster the
-  changelog and base table should share bucketing on the key so the
-  next merge is Exchange-free.
-* :func:`merge_snapshot` — apply a compacted changelog to a base
-  snapshot (merge-on-read compaction): when the changelog is small
-  its key set broadcasts and the base table is never shuffled.
+  latest-state-per-key: ``keep_latest`` plus the delete filter.
+* :func:`merge_snapshot` — apply a changelog to a base snapshot
+  (merge-on-read compaction): base rows whose key has no change pass
+  through a broadcast anti-join and are never shuffled; the touched
+  base rows compete with the changes in one ``keep_latest``.
 
 Keyed snapshot-to-snapshot diffing lives in operators/etl.py
 (:func:`~data_misc_tools_spark.operators.etl.snapshot_diff`, the
 oracle-checked catalog entry); the streaming twin of compaction is
 streaming/upsert.py's keep-latest sink.
 
-Both are pure Catalyst (no Python in the hot path) and orders of
+All are pure Catalyst (no Python in the hot path) and orders of
 magnitude cheaper than the rebuild they replace: compaction touches
-only the changelog, the merge reads one snapshot scan.
+only the changelog, and the merge shuffles only the changes and the
+base rows they touch.
 """
 
 from __future__ import annotations
@@ -33,6 +37,31 @@ from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
 
+def keep_latest(
+    df: DataFrame,
+    key_cols: Sequence[str],
+    order_cols: Sequence[str],
+) -> DataFrame:
+    """One row per key: the row with the max (order_cols) tuple. The
+    key columns come first, then the others in ``df``'s order.
+
+    One ``max_by`` over structs, grouped by the keys: a partial and a
+    final aggregate around one shuffle, no window. ``HashAggregate``
+    takes only fixed-width buffer fields and this buffer holds the
+    structs, so both aggregates plan as ``SortAggregate``, each after a
+    sort on the keys. A NULL in ``order_cols`` sorts below any value,
+    so it loses to a non-NULL one. ``order_cols`` must be a total order
+    per key (include a unique sequence column as tiebreak: max_by ties
+    are engine-unspecified).
+    """
+    keys = list(key_cols)
+    others = [c for c in df.columns if c not in keys]
+    packed = df.groupBy(*keys).agg(
+        F.max_by(F.struct(*others), F.struct(*order_cols)).alias("__row")
+    )
+    return packed.select(*keys, "__row.*")
+
+
 def compact_changelog(
     changelog: DataFrame,
     key_cols: Sequence[str],
@@ -40,7 +69,8 @@ def compact_changelog(
     op_col: str | None = None,
     delete_ops: Sequence[str] = ("delete",),
 ) -> DataFrame:
-    """Latest state per key from an upsert/delete changelog.
+    """Latest state per key from an upsert/delete changelog, in the
+    changelog's column order.
 
     ``seq_cols`` must be a total order within each key (e.g.
     ``["ts", "event_id"]``) — ties would make the winner
@@ -48,21 +78,15 @@ def compact_changelog(
     winning ``op_col`` is in ``delete_ops`` are dropped (the key no
     longer exists).
 
-    Scale shape: one hash Exchange on ``key_cols``; ``row_number`` is
-    a within-partition sort; the filter on rn=1 is evaluated before
-    anything downstream sees the row.  No global sort, no Python.
+    Scale shape: :func:`keep_latest` — one hash Exchange on
+    ``key_cols`` between a partial and a final sort aggregate; the
+    delete filter runs on the winners.  No window, no global sort, no
+    Python.
     """
-    w = Window.partitionBy(*key_cols).orderBy(
-        *[F.col(c).desc() for c in seq_cols]
-    )
-    out = (
-        changelog.withColumn("__rn", F.row_number().over(w))
-        .filter(F.col("__rn") == 1)
-        .drop("__rn")
-    )
+    out = keep_latest(changelog, key_cols, seq_cols)
     if op_col is not None:
         out = out.filter(~F.col(op_col).isin(list(delete_ops)))
-    return out
+    return out.select(*changelog.columns)
 
 
 def merge_snapshot(
@@ -74,21 +98,32 @@ def merge_snapshot(
     delete_ops: Sequence[str] = ("delete",),
 ) -> DataFrame:
     """Next snapshot = base rows whose key has no change, plus the
-    compacted changelog's surviving rows (upsert-wins, deletes drop).
+    newest row of each changed key among its changes and its base row
+    (deletes drop the key). Column set follows ``base``.
 
-    The classic merge-on-read compaction: compact the (small)
-    changelog first, then LEFT ANTI join the (large) base against the
-    compacted keys — when the changelog is small Spark broadcasts the
-    anti-join side and the base table is never shuffled at all.
-    Column set follows ``base``.
+    A base row competes by its own ``seq_cols``, so an older,
+    out-of-order change never overwrites it; a base without those
+    columns loses to any change with a non-NULL sequence. The base rows
+    of unchanged keys pass through a LEFT ANTI join against the changed
+    keys (broadcast when the changelog is small): only the changes and
+    the base rows they touch are shuffled, in one :func:`keep_latest`.
     """
-    compacted = compact_changelog(
-        changelog, key_cols, seq_cols, op_col=op_col, delete_ops=delete_ops
-    )
-    touched = compact_changelog(changelog, key_cols, seq_cols)  # incl. deletes
     keys = list(key_cols)
-    kept = base.join(touched.select(*keys).distinct(), on=keys, how="left_anti")
-    return kept.unionByName(compacted.select(*base.columns))
+    touched = changelog.select(*keys).distinct()
+    kept = base.join(touched, on=keys, how="left_anti")
+    rivals = base.join(touched, on=keys, how="left_semi").withColumn(
+        "__base", F.lit(True)
+    )
+    latest = keep_latest(
+        changelog.unionByName(rivals, allowMissingColumns=True), keys, seq_cols
+    )
+    if op_col is not None:
+        # only a change deletes: a winning base row stays whatever its
+        # op (NULL when the base has no op column)
+        latest = latest.filter(
+            F.col("__base") | ~F.col(op_col).isin(list(delete_ops))
+        )
+    return kept.unionByName(latest.select(*base.columns))
 
 
 def scd2_intervals(

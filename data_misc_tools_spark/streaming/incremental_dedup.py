@@ -12,9 +12,10 @@ the r9 shape re-ran the md5 shingle pass per step, 3x):
    backlog was hashed once, when it streamed through);
 2. cluster labels merge INCREMENTALLY
    (cluster.connected_components_incremental over the contracted
-   graph) into a versioned snapshot store (the upsert.py layout:
-   ``labels/v=N`` + ``_SUCCESS`` commit markers, torn writes
-   invisible);
+   graph) into ``labels``, a versioned snapshot store: torn writes
+   are invisible, and only streaming/upsert.py knows the format — it
+   lists (``_committed``), reads (``_snapshot``) and writes
+   (``_commit``) every store here;
 3. the batch's band table appends into the persisted MinHash index
    (dedup.minhash_index_append_bands — the already-pinned bands write
    directly), and the batch's normalized edges append to an ``edges``
@@ -40,61 +41,50 @@ band-aligned row groups), the per-batch CC runs on the CONTRACTED
 graph (component-representatives touched by new edges, not the
 corpus), and the labels snapshot is HASH-BUCKETED behind
 ``buckets=N`` (VERDICT r9 #7): each bucket keeps its own version
-chain (``labels/b=K/v=N``), a batch computes only the CHANGED rows
+chain (the store ``labels/b=K``), a batch computes only the CHANGED rows
 (cluster.connected_components_incremental_delta) and rewrites the
 buckets holding them — every other bucket's files are untouched.
 ``buckets=1`` (default) keeps the flat whole-directory versions for
 auditability (the upsert.py trade). A crash between bucket writes
 can leave buckets at mixed versions for one batch; each bucket's
-version is individually atomic (_SUCCESS markers) and replaying the
+version is individually atomic (a commit marker) and replaying the
 batch converges, so the window closes on restart — a strict batch-id
 ledger (streaming/exactly_once.py) removes even that window.
 """
 
 from __future__ import annotations
 
+from functools import reduce
+
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from data_misc_tools_spark.sources import fs as _fsh
-from data_misc_tools_spark.streaming.upsert import _current_version, _versions
+from data_misc_tools_spark.streaming.upsert import _commit, _committed, _snapshot
 
 
 def _bucket_dirs(spark: SparkSession, labels_path: str) -> list[str]:
-    """``b=K`` subdirectories of a bucketed labels store (empty list
-    for the flat layout)."""
-    if not _fsh.exists(spark, labels_path):
-        return []
+    """``b=K`` stores of a bucketed labels store, as ``labels_path/b=K``
+    (empty list for the flat layout or a missing store)."""
     return sorted(
-        e["path"]
-        for e in _fsh.ls(spark, labels_path)
-        if e["is_dir"] and e["path"].rsplit("/", 1)[-1].startswith("b=")
+        f"{labels_path}/{e['path'].rsplit('/', 1)[-1]}"
+        for e in _fsh.glob(spark, _fsh.escape_glob(labels_path) + "/b=*")
     )
 
 
 def read_labels(spark: SparkSession, state_path: str) -> DataFrame | None:
     """Current committed (node, component) snapshot, None before the
-    first batch. Layout-aware: a bucketed store (``labels/b=K/v=N``)
-    reads the union of each bucket's current version; the flat store
-    reads ``labels/v=N``."""
+    first batch. Layout-aware: a bucketed store (``labels/b=K``) reads
+    the union of each bucket's current version; the flat store reads
+    ``labels``'s. Starts no Spark job for versions this process wrote
+    or read (streaming/upsert.py ``_snapshot``)."""
     labels_path = f"{state_path}/labels"
-    bdirs = _bucket_dirs(spark, labels_path)
-    if bdirs:
-        parts = []
-        for bd in bdirs:
-            v = _current_version(spark, bd)
-            if v is not None:
-                parts.append(f"{bd}/v={v}")
-        if not parts:
-            return None
-        out = spark.read.parquet(parts[0])
-        for p in parts[1:]:
-            out = out.unionByName(spark.read.parquet(p))
-        return out
-    v = _current_version(spark, labels_path)
-    if v is None:
-        return None
-    return spark.read.parquet(f"{labels_path}/v={v}")
+    parts = [
+        snap
+        for p in _bucket_dirs(spark, labels_path) or [labels_path]
+        if (snap := _snapshot(spark, p, _committed(spark, p))) is not None
+    ]
+    return reduce(DataFrame.unionByName, parts) if parts else None
 
 
 def read_edges(spark: SparkSession, state_path: str) -> DataFrame | None:
@@ -103,7 +93,9 @@ def read_edges(spark: SparkSession, state_path: str) -> DataFrame | None:
     p = f"{state_path}/edges"
     if not _fsh.exists(spark, p):
         return None
-    return spark.read.parquet(p).select("doc_a", "doc_b").distinct()
+    return (
+        spark.read.parquet(_fsh.escape_glob(p)).select("doc_a", "doc_b").distinct()
+    )
 
 
 class IncrementalDedupSink:
@@ -176,27 +168,19 @@ class IncrementalDedupSink:
             edges = internal.unionByName(vs)
         edges = edges.distinct().localCheckpoint()
 
-        cur = read_labels(spark, self.state_path)
+        labels_path = f"{self.state_path}/labels"
         if self.buckets == 1:
+            committed = _committed(spark, labels_path)
+            cur = _snapshot(spark, labels_path, committed)
             if cur is None:
                 labels = connected_components(edges, src="doc_a", dst="doc_b")
             else:
                 labels = connected_components_incremental(
                     cur, edges, src="doc_a", dst="doc_b"
                 )
-            next_v = (
-                _current_version(spark, f"{self.state_path}/labels") or 0
-            ) + 1
-            labels.write.mode("overwrite").parquet(
-                f"{self.state_path}/labels/v={next_v}"
-            )
-            if self.keep_versions > 0:
-                for v in _versions(spark, f"{self.state_path}/labels")[
-                    : -self.keep_versions
-                ]:
-                    _fsh.delete(spark, f"{self.state_path}/labels/v={v}")
+            _commit(labels, labels_path, committed, self.keep_versions)
         else:
-            self._write_bucketed(spark, cur, edges)
+            self._write_bucketed(spark, read_labels(spark, self.state_path), edges)
 
         edges.write.mode("append").parquet(f"{self.state_path}/edges")
         D.minhash_index_append_bands(bands_b, self.index_path)
@@ -229,18 +213,15 @@ class IncrementalDedupSink:
             delta_k = delta.filter(F.col("__b") == k).select(
                 "node", "component"
             )
-            v = _current_version(spark, bdir)
-            if v is None:
+            committed = _committed(spark, bdir)
+            old_k = _snapshot(spark, bdir, committed)
+            if old_k is None:
                 new_k = delta_k
             else:
-                old_k = spark.read.parquet(f"{bdir}/v={v}")
                 new_k = old_k.join(
                     F.broadcast(delta_k.select("node")), "node", "left_anti"
                 ).unionByName(delta_k)
-            new_k.write.mode("overwrite").parquet(f"{bdir}/v={(v or 0) + 1}")
-            if self.keep_versions > 0:
-                for old_v in _versions(spark, bdir)[: -self.keep_versions]:
-                    _fsh.delete(spark, f"{bdir}/v={old_v}")
+            _commit(new_k, bdir, committed, self.keep_versions)
 
 
 def incremental_dedup_stream(

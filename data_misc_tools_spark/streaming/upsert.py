@@ -9,18 +9,23 @@ snapshot, exactly the materialized-view upkeep the reference's runner
 loop approximates by re-reading a window every minute (reference:
 process/InterpreterLoader.scala:127-131).
 
-Design — versioned snapshot directories, not in-place overwrite:
+Design — versioned snapshot directories, not in-place overwrite.
+This module is the only code that knows the store format: every
+store is listed by ``_committed``, read by ``_snapshot`` and written
+by ``_commit`` (streaming/incremental_dedup.py keeps its labels in
+such stores, one per bucket).
 
 * ``path/v=N`` holds a full snapshot; the CURRENT snapshot is the
   highest N whose directory contains Spark's ``_SUCCESS`` marker.
   Readers never see a torn snapshot: a crash mid-write leaves a
   marker-less directory that every reader and the next merge skip.
 * Each micro-batch: union the change rows with the current snapshot,
-  keep-latest per key (max_by over the order columns — a partial and a
-  final sort aggregate around one shuffle, no window), write version
-  N+1. The merge cost is O(snapshot + batch) per batch
-  — the standard copy-on-write table format trade (Delta/Hudi/Iceberg
-  do exactly this per commit, plus a manifest). At 100 TB the
+  keep-latest per key (operators/cdc.py ``keep_latest``: max_by over
+  the order columns — a partial and a final sort aggregate around one
+  shuffle, no window), write version N+1. The merge cost is
+  O(snapshot + batch) per batch — the standard copy-on-write table
+  format trade (Delta/Hudi/Iceberg do exactly this per commit, plus a
+  manifest). At 100 TB the
   snapshot would be partitioned by key-hash bucket so a batch only
   rewrites touched buckets; here versions are whole-directory for
   auditability.
@@ -31,7 +36,7 @@ Design — versioned snapshot directories, not in-place overwrite:
   dropping aged tombstones is a compaction policy, not merge logic.
 * One listing: the committed versions and their markers' mtimes come
   from one Hadoop ``globStatus`` of ``path/v=*/_SUCCESS``; a batch
-  lists the store once, and prunes from that listing.
+  lists the store once, and its commit prunes from that listing.
 * Committed versions are write-once, so the module remembers the
   schema of the version last written or read per store path, keyed
   by (version, ``_SUCCESS`` mtime), and reads that version as
@@ -58,33 +63,12 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.types import StructType
 
+from data_misc_tools_spark.operators.cdc import keep_latest
 from data_misc_tools_spark.sources import fs as _fsh
 
 # Store path -> (version, marker mtime ms, schema) of the snapshot last
 # written or read there (see the module docstring).
 _SCHEMAS: dict[str, tuple[int, int, StructType]] = {}
-
-
-def keep_latest(
-    df: DataFrame,
-    key_cols: list[str],
-    order_cols: list[str],
-) -> DataFrame:
-    """One row per key: the row with the max (order_cols) tuple.
-
-    One ``max_by`` over structs, grouped by the keys: a partial and a
-    final aggregate around one shuffle, no window. ``HashAggregate``
-    takes only fixed-width buffer fields and this buffer holds the
-    structs, so both aggregates plan as ``SortAggregate``, each after a
-    sort on the keys. ``order_cols`` must be a total order per key
-    (include a unique sequence column as tiebreak: max_by ties are
-    engine-unspecified, CLAUDE.md invariant).
-    """
-    others = [c for c in df.columns if c not in key_cols]
-    packed = df.groupBy(*key_cols).agg(
-        F.max_by(F.struct(*others), F.struct(*order_cols)).alias("__row")
-    )
-    return packed.select(*key_cols, "__row.*")
 
 
 def _committed(spark: SparkSession, path: str) -> dict[int, int]:
@@ -124,6 +108,21 @@ def _snapshot(spark: SparkSession, path: str, committed: dict[int, int]) -> Data
     snap = spark.read.parquet(src)
     _SCHEMAS[path] = (v, committed[v], snap.schema)
     return snap
+
+
+def _commit(df: DataFrame, path: str, committed: dict[int, int], keep_versions: int) -> None:
+    """Write ``df`` as the next version of the store at ``path``, whose
+    ``_committed`` listing is ``committed``; remember its schema (the
+    next read starts no job) and delete all but the newest
+    ``keep_versions`` versions (all kept when <= 0)."""
+    spark = df.sparkSession
+    v = max(committed, default=0) + 1
+    out = f"{path}/v={v}"
+    df.write.mode("overwrite").parquet(out)
+    _SCHEMAS[path] = (v, _fsh.stat(spark, f"{out}/_SUCCESS")["mtime_ms"], df.schema)
+    if keep_versions > 0:
+        for old in sorted([*committed, v])[:-keep_versions]:
+            _fsh.delete(spark, f"{path}/v={old}")
 
 
 def read_latest(
@@ -174,23 +173,7 @@ class ParquetUpsertSink:
         current = _snapshot(spark, self.path, committed)
         merged = batch if current is None else batch.unionByName(current)
         latest = keep_latest(merged, self.key_cols, self.order_cols)
-        next_v = max(committed, default=0) + 1
-        out = f"{self.path}/v={next_v}"
-        latest.write.mode("overwrite").parquet(out)
-        # The writer knows the schema: the next read starts no job.
-        _SCHEMAS[self.path] = (
-            next_v,
-            _fsh.stat(spark, f"{out}/_SUCCESS")["mtime_ms"],
-            latest.schema,
-        )
-        self._prune(spark, [*committed, next_v])
-
-    def _prune(self, spark: SparkSession, versions: list[int]) -> None:
-        keep = self.keep_versions
-        if keep <= 0:
-            return
-        for v in sorted(versions)[:-keep]:
-            _fsh.delete(spark, f"{self.path}/v={v}")
+        _commit(latest, self.path, committed, self.keep_versions)
 
 
 def upsert_stream(

@@ -138,6 +138,52 @@ def test_merge_snapshot_applies_changes_without_touching_rest(spark):
     assert out == {1: "a", 2: "b2", 4: "d"}  # 3 deleted, 1 untouched
 
 
+def test_merge_snapshot_keeps_base_rows_newer_than_their_changes(spark):
+    """A base row carries its own sequence: an older, out-of-order
+    change (upsert or delete) for its key does not replace it."""
+    from data_misc_tools_spark.operators.cdc import merge_snapshot
+
+    base = spark.createDataFrame(
+        [(1, 5, "a"), (2, 5, "b"), (3, 1, "c"), (4, 1, "d")],
+        "k long, seq long, val string",
+    )
+    log = spark.createDataFrame(
+        [
+            (1, 3, "a-old", "upsert"),
+            (2, 3, None, "delete"),
+            (3, 4, "c2", "upsert"),
+            (4, 2, None, "delete"),
+        ],
+        "k long, seq long, val string, op string",
+    )
+    out = {tuple(r) for r in
+           merge_snapshot(base, log, ["k"], ["seq"], op_col="op").collect()}
+    assert out == {(1, 5, "a"), (2, 5, "b"), (3, 4, "c2")}
+
+
+def test_compact_changelog_keeps_column_order_and_null_seq_loses(spark):
+    """The output columns follow the changelog's order (keys not moved
+    first), and a NULL sequence loses to any non-NULL one — the winner
+    of a row_number over the sequence DESC (NULLS LAST)."""
+    from data_misc_tools_spark.operators.cdc import compact_changelog
+
+    log = spark.createDataFrame(
+        [
+            ("x", 1, 2, "u"),
+            ("x-null", 1, None, "u"),
+            ("y-null", 2, None, "u"),
+            ("z", 3, 7, "u"),
+            ("z-null", 3, None, "u"),
+        ],
+        "val string, k long, seq long, op string",
+    )
+    out = compact_changelog(log, ["k"], ["seq"], op_col="op")
+    assert out.columns == ["val", "k", "seq", "op"]
+    assert sorted(map(tuple, out.collect())) == [
+        ("x", 1, 2, "u"), ("y-null", 2, None, "u"), ("z", 3, 7, "u"),
+    ]
+
+
 def test_dataset_fingerprint_order_insensitive_and_sensitive_to_data(spark):
     from data_misc_tools_spark.operators.etl import dataset_fingerprint
 

@@ -263,12 +263,18 @@ def test_editdist_verify_joins_broadcast(spark, sf_dir):
     assert "Python" not in plan
 
 
-def test_changelog_compact_one_exchange_window(spark, sf_dir):
-    """compact_changelog: ONE key Exchange feeding a partition-local
-    window sort — a global Sort would mean the rn=1 pick regressed."""
+def test_changelog_compact_one_exchange_sort_aggregate(spark, sf_dir):
+    """compact_changelog (cdc.keep_latest): ONE key Exchange between a
+    partial and a final max_by SortAggregate, each after a
+    partition-local sort — a Window or a global Sort would mean the
+    keep-latest pick regressed."""
     plan = _plan(spark, "changelog_compact_demo", sf_dir)
     assert _n_exchanges(plan) == 1
-    assert "Window" in plan
+    assert "SortAggregate" in plan
+    assert "Window" not in plan
+    # formatted explain: a Sort's arguments are "[order], global, ..."
+    sorts = re.findall(r"\(\d+\) Sort\s*\n.*\nArguments: \[.*\], (true|false)", plan)
+    assert sorts and "true" not in sorts, sorts
     assert "Python" not in plan
 
 

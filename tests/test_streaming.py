@@ -1522,6 +1522,52 @@ class TestIncrementalDedupStream:
         # so bucket version chains cannot all be equal-length
         assert len(set(versions.values())) > 1, versions
 
+    def _two_batches(self, spark, index_path, state_path, buckets):
+        """Fold the corpus into a sink as two micro-batches, called
+        directly (no stream)."""
+        from data_misc_tools_spark.streaming.incremental_dedup import (
+            IncrementalDedupSink,
+        )
+
+        rows = self._docs(spark)
+        sink = IncrementalDedupSink(index_path, state_path, buckets=buckets)
+        for batch_id, chunk in enumerate((rows[:3], rows[3:])):
+            sink.process_batch(
+                spark.createDataFrame(chunk, "doc_id long, text string"), batch_id
+            )
+
+    @pytest.mark.parametrize("buckets", [1, 4])
+    def test_read_labels_after_a_batch_starts_no_job(self, spark, tmp_path, buckets):
+        """The labels store is the upsert store: versions the sink wrote
+        are read with their remembered schema, no footer job per bucket."""
+        from data_misc_tools_spark.streaming.incremental_dedup import read_labels
+
+        state = str(tmp_path / "state")
+        self._two_batches(spark, str(tmp_path / "idx"), state, buckets)
+        assert jobs_started(spark, lambda: read_labels(spark, state)) == 0
+        got = {r.node: r.component for r in read_labels(spark, state).collect()}
+        assert set(got) == {1, 2, 3, 4, 7, 8}  # 6 collides with nothing
+        assert got[8] == got[4] and got[3] == got[1]
+
+    @pytest.mark.parametrize("buckets", [1, 4])
+    def test_state_path_with_glob_characters(self, spark, tmp_path, buckets):
+        from data_misc_tools_spark.streaming.incremental_dedup import (
+            read_edges,
+            read_labels,
+        )
+
+        def state(name, index):
+            st = str(tmp_path / name / "state")
+            self._two_batches(spark, str(tmp_path / index), st, buckets)
+            return (
+                sorted(map(tuple, read_labels(spark, st).collect())),
+                sorted(map(tuple, read_edges(spark, st).collect())),
+            )
+
+        plain = state("plain", "idx_plain")
+        assert plain[0] and plain[1]
+        assert state("a[1]{b,c}*", "idx_glob") == plain
+
     def test_bucketed_delta_union_equals_full_incremental(self, spark):
         """cluster.connected_components_incremental_delta: anti-join
         ∪ delta == the full incremental result, on a merge that
