@@ -5265,8 +5265,11 @@ def zktree_source_demo(spark: SparkSession, sf_dir: str) -> DataFrame:
     oracle-checkable; a real cluster swaps .option('hosts', ...) in."""
     import json
 
+    from data_misc_tools_spark.sources.pydatasource import register_python_datasources
+
     seed = {"/app": "root", "/app/db": "mysql",
             "/app/db/host": "h1", "/app/db/port": "3306"}
+    register_python_datasources(spark)
     return (
         spark.read.format("zktree")
         .option("paths", "/app")
@@ -5293,7 +5296,10 @@ def rediskeys_source_demo(spark: SparkSession, sf_dir: str) -> DataFrame:
     deterministic fake seed."""
     import json
 
+    from data_misc_tools_spark.sources.pydatasource import register_python_datasources
+
     seed = {"user:1": "ann", "user:2": "bob", "cfg:x": "1", "user:10": "cat"}
+    register_python_datasources(spark)
     return (
         spark.read.format("rediskeys")
         .option("pattern", "user:*")
@@ -7964,6 +7970,7 @@ def warc_source_demo(spark: SparkSession, sf_dir: str) -> DataFrame:
     are multi-byte). See sources/warc.py."""
     import tempfile
 
+    from data_misc_tools_spark.sources.pydatasource import register_python_datasources
     from data_misc_tools_spark.sources.warc import warc_write_records
 
     d = load_tables(spark, sf_dir, ["documents"])["documents"]
@@ -7986,6 +7993,7 @@ def warc_source_demo(spark: SparkSession, sf_dir: str) -> DataFrame:
             ],
         )
         cache[sf_dir] = path
+    register_python_datasources(spark)
     return (
         spark.read.format("warc")
         .load(path)

@@ -25,6 +25,7 @@ from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 from data_misc_tools_spark.session import local_df
+from data_misc_tools_spark.sources.fs import escape_glob
 
 
 from data_misc_tools_spark.operators.util import spread as _spread
@@ -587,11 +588,18 @@ def minhash_index_query_bands(
 ) -> DataFrame:
     """:func:`minhash_index_query` over a PREBUILT band table (r10):
     the join tail alone, for callers that hash the batch once and fan
-    its bands out to several consumers."""
+    its bands out to several consumers.
+
+    The index holds the rows :func:`minhash_index_append_bands` wrote
+    from band tables like this one, so it is read with this table's
+    schema (``band`` is the partition column): planning the query
+    reads no footer, and starts no Spark job for it."""
     spark = bands_df.sparkSession
     qb = bands_df.select(F.col(id_col).alias("batch_id"), "band", "band_val")
-    idx = spark.read.parquet(path).select(
-        F.col(id_col).alias("index_id"), "band", "band_val"
+    idx = (
+        spark.read.schema(bands_df.select(id_col, "band_val", "band").schema)
+        .parquet(escape_glob(path))
+        .select(F.col(id_col).alias("index_id"), "band", "band_val")
     )
     return (
         qb.join(idx, ["band", "band_val"])

@@ -14,6 +14,7 @@ deterministic across engines.
 
 from __future__ import annotations
 
+import logging
 import os
 
 from pyspark.sql import SparkSession
@@ -35,6 +36,12 @@ def build_session(
       to ``local[*]``) when no master is configured externally.
     - ``shuffle_partitions`` defaults to the local core count; on a
       cluster AQE coalesces/splits at runtime anyway.
+
+    The session gets every SQL function (:func:`register_all`) and
+    starts no Python process. The Python data sources (``zktree``,
+    ``rediskeys``, ``warc``) are not registered here: call
+    ``sources.pydatasource.register_python_datasources(spark)`` before
+    reading them.
     """
     builder = SparkSession.builder.appName(app_name)
     if hive:
@@ -203,44 +210,54 @@ def register_all(spark: SparkSession) -> SparkSession:
     (reference: hive-udfs/src/test/resources/setup.sql:6-56), so both
     ``spark.sql("select url_encode(...)")`` and the ``F``-style Python
     API work. Also ships the package to executors (see ship_package).
+
+    Starts no Python process. The Python data sources are registered
+    on first use, by ``sources.pydatasource.register_python_datasources``:
+    Spark's first ``spark.dataSource.register`` starts a Python lookup
+    daemon (``pyspark.sql.worker.lookup_data_sources``) that stays
+    resident for the rest of the session, and no SQL function needs it.
     """
     from data_misc_tools_spark.functions.registry import register_functions
-    from data_misc_tools_spark.sources.pydatasource import register_python_datasources
 
     # Memoized per session (the ship_package idiom): catalog queries
-    # call this on every invocation, and re-registering ~15 SQL UDFs +
-    # 2 Python data sources per query is a measurable per-query fixed
-    # cost (the r3 bench drift on shared queries: +0.2-0.4 s each in
-    # 158-query sessions).
+    # call this on every invocation, and re-registering ~15 SQL UDFs
+    # per query is a measurable per-query fixed cost (the r3 bench
+    # drift on shared queries: +0.2-0.4 s each in 158-query sessions).
     cache = session_cache(spark, "registered")
     if cache.get("done"):
         return spark
     ship_package(spark)
     register_functions(spark)
-    register_python_datasources(spark)
     cache["done"] = True
     return spark
 
 
 def nanos_ts_columns(path: str) -> list[str]:
-    """Column names stored as parquet TIMESTAMP(NANOS) at ``path``.
+    """Column names stored as parquet TIMESTAMP(NANOS) at ``path``, a
+    parquet file or a directory of them.
 
     Spark has no nanosecond timestamp type; such columns are read as
     raw longs (``spark.sql.legacy.parquet.nanosAsLong``) and converted
-    to microsecond timestamps by :func:`read_parquet_table`.
+    to microsecond timestamps by :func:`read_parquet_table`. A path
+    pyarrow cannot open (a URI scheme it has no filesystem for) yields
+    no columns, and is logged.
     """
-    try:
-        import pyarrow as pa
-        import pyarrow.parquet as pq
+    import pyarrow as pa
+    import pyarrow.dataset as ds
 
-        schema = pq.read_schema(path)
-        return [
-            f.name
-            for f in schema
-            if pa.types.is_timestamp(f.type) and f.type.unit == "ns"
-        ]
-    except Exception:
+    try:
+        # A directory's schema comes from its data files; like Spark,
+        # the dataset skips names starting with "_" or "." (_SUCCESS).
+        schema = ds.dataset(path, format="parquet").schema
+    except (OSError, pa.ArrowInvalid) as e:
+        logging.getLogger(__name__).warning(
+            "cannot read the parquet schema of %s, no column is taken "
+            "as TIMESTAMP(NANOS): %s", path, e
+        )
         return []
+    return [
+        f.name for f in schema if pa.types.is_timestamp(f.type) and f.type.unit == "ns"
+    ]
 
 
 def read_parquet_table(spark: SparkSession, path: str):

@@ -9,6 +9,10 @@ root), and the result composes with joins/filters like any other
 source — instead of a driver-side helper returning a materialized
 DataFrame.
 
+The sources are registered on first use, not by ``build_session``:
+call :func:`register_python_datasources` on the session before
+``spark.read.format("zktree" / "rediskeys" / "warc")``.
+
 Connectivity is option-driven:
 
 - ``hosts`` (zktree) / ``url`` (rediskeys): real client, import-gated
@@ -146,9 +150,24 @@ class RedisKeysReader(DataSourceReader):
 
 
 def register_python_datasources(spark) -> None:
-    """Install the custom sources on this session (idempotent)."""
+    """Install the ``zktree``, ``rediskeys`` and ``warc`` sources on this
+    session; call it before ``spark.read.format(...)`` of any of them.
+
+    ``build_session``/``register_all`` do not call it: Spark's first
+    ``spark.dataSource.register`` starts a Python lookup daemon below
+    the JVM that stays for the rest of the session, which a session
+    that reads none of these formats should not pay for. Memoized per
+    session; ships the package first (the readers run on executors),
+    so it works on a session ``register_all`` never saw.
+    """
+    from data_misc_tools_spark.session import session_cache, ship_package
     from data_misc_tools_spark.sources.warc import WarcDataSource
 
+    cache = session_cache(spark, "python_datasources")
+    if cache.get("done"):
+        return
+    ship_package(spark)
     spark.dataSource.register(ZKTreeDataSource)
     spark.dataSource.register(RedisKeysDataSource)
     spark.dataSource.register(WarcDataSource)
+    cache["done"] = True

@@ -3,6 +3,11 @@
 in, so a training-data pipeline can scan raw crawl shards without a
 pre-conversion hop:
 
+    from data_misc_tools_spark.sources.pydatasource import (
+        register_python_datasources,
+    )
+
+    register_python_datasources(spark)  # once per session, first use
     spark.read.format("warc").load("/crawl/segment/*.warc.gz")
 
 Output: one row per WARC record — (file, warc_type, target_uri, date,

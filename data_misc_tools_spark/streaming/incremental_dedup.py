@@ -58,9 +58,16 @@ from functools import reduce
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql.types import StructType
 
 from data_misc_tools_spark.sources import fs as _fsh
 from data_misc_tools_spark.streaming.upsert import _commit, _committed, _snapshot
+
+
+# Edge-log path -> schema of the (doc_a, doc_b) rows written there. A
+# module dict, not per session: foreachBatch hands every micro-batch a
+# new Python SparkSession (the streaming/upsert.py ``_SCHEMAS`` memo).
+_EDGE_SCHEMAS: dict[str, StructType] = {}
 
 
 def _bucket_dirs(spark: SparkSession, labels_path: str) -> list[str]:
@@ -89,13 +96,18 @@ def read_labels(spark: SparkSession, state_path: str) -> DataFrame | None:
 
 def read_edges(spark: SparkSession, state_path: str) -> DataFrame | None:
     """The accumulated candidate-edge log (doc_a < doc_b, may hold
-    cross-batch duplicates — distinct at read time)."""
+    cross-batch duplicates — distinct at read time). Read with the
+    schema the sink wrote (``_EDGE_SCHEMAS``), so it starts no footer
+    job in the process that ran the sink; elsewhere the first read
+    infers it once."""
     p = f"{state_path}/edges"
     if not _fsh.exists(spark, p):
         return None
-    return (
-        spark.read.parquet(_fsh.escape_glob(p)).select("doc_a", "doc_b").distinct()
-    )
+    schema = _EDGE_SCHEMAS.get(p)
+    reader = spark.read if schema is None else spark.read.schema(schema)
+    df = reader.parquet(_fsh.escape_glob(p))
+    _EDGE_SCHEMAS[p] = df.schema
+    return df.select("doc_a", "doc_b").distinct()
 
 
 class IncrementalDedupSink:
@@ -183,6 +195,7 @@ class IncrementalDedupSink:
             self._write_bucketed(spark, read_labels(spark, self.state_path), edges)
 
         edges.write.mode("append").parquet(f"{self.state_path}/edges")
+        _EDGE_SCHEMAS[f"{self.state_path}/edges"] = edges.schema
         D.minhash_index_append_bands(bands_b, self.index_path)
 
     def _write_bucketed(self, spark, cur: DataFrame | None, edges: DataFrame) -> None:

@@ -42,6 +42,7 @@ def main() -> int:
     )
     from data_misc_tools_spark.operators.web import canonical_url
     from data_misc_tools_spark.session import build_session, load_tables
+    from data_misc_tools_spark.sources.pydatasource import register_python_datasources
     from data_misc_tools_spark.sources.warc import warc_write_records
 
     spark = build_session(app_name="curation-demo")
@@ -58,6 +59,7 @@ def main() -> int:
         [("response", f"https://site{r.doc_id % 100}.example.com/p/{r.doc_id}"
           f"?utm_source=feed", r.text.encode("utf-8")) for r in rows],
     )
+    register_python_datasources(spark)
     crawl = (
         spark.read.format("warc").load(shard_dir)
         .select(

@@ -5,9 +5,27 @@ reads) — reference: UDFZooKeeperRead.java, UDTFJedisKeys.java.
 
 import json
 
+import pytest
 from pyspark.sql import functions as F
 
+from data_misc_tools_spark.sources.pydatasource import register_python_datasources
+
 ZK_SEED = {"/app": "root", "/app/db": "mysql", "/app/db/host": "h1", "/other": "x"}
+
+
+@pytest.fixture(scope="module", autouse=True)
+def _registered(spark):
+    """The sources are registered on first use, not by build_session."""
+    register_python_datasources(spark)
+
+
+def test_second_registration_registers_nothing(spark, monkeypatch):
+    from pyspark.sql.datasource import DataSourceRegistration
+
+    calls = []
+    monkeypatch.setattr(DataSourceRegistration, "register", lambda self, ds: calls.append(ds))
+    register_python_datasources(spark)
+    assert calls == []
 
 
 def test_zktree_format_reads_subtree(spark):

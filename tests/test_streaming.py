@@ -1566,7 +1566,25 @@ class TestIncrementalDedupStream:
 
         plain = state("plain", "idx_plain")
         assert plain[0] and plain[1]
-        assert state("a[1]{b,c}*", "idx_glob") == plain
+        assert state("a[1]{b,c}*", "idx[2]{d,e}*") == plain
+
+    def test_index_query_and_read_edges_start_no_job(self, spark, tmp_path):
+        """The index and the edge log are read with the schema their
+        writer knows: planning the batch-vs-index query and read_edges
+        read no parquet footer."""
+        from data_misc_tools_spark.operators import dedup as D
+        from data_misc_tools_spark.streaming.incremental_dedup import read_edges
+
+        idx, state = str(tmp_path / "idx"), str(tmp_path / "state")
+        self._two_batches(spark, idx, state, 1)
+        bands = D.minhash_band_table(
+            spark.createDataFrame(self._docs(spark), "doc_id long, text string")
+        )
+        assert jobs_started(spark, lambda: D.minhash_index_query_bands(bands, idx)) == 0
+        assert jobs_started(spark, lambda: read_edges(spark, state)) == 0
+        pairs = {tuple(r) for r in D.minhash_index_query_bands(bands, idx).collect()}
+        assert {(1, 2), (2, 1), (4, 8), (8, 4)} <= pairs
+        assert {(1, 2), (4, 8)} <= {tuple(r) for r in read_edges(spark, state).collect()}
 
     def test_bucketed_delta_union_equals_full_incremental(self, spark):
         """cluster.connected_components_incremental_delta: anti-join
